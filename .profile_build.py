@@ -32,8 +32,7 @@ for par in levels:
                           shuffle_partitions=max(8, par * 4))
         pages = spark.read.parquet(pages_path)
         t0 = time.time()
-        h = build_persistent_index(spark, pages, out, verbose=False,
-                                   materialize_bm25=False)
+        h = build_persistent_index(spark, pages, out, verbose=False)
         wall = time.time() - t0
         stages = {m["name"]: m["seconds"] for m in h["writer"].metrics()}
         print(json.dumps({"par": par, "rep": rep, "wall": round(wall, 2),

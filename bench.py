@@ -106,11 +106,7 @@ def build_at(parallelism: int, pages_path: str, out_dir: str,
              repeats: int = 2) -> float:
     """Full staged build at the given core count reading the SAME pages
     parquet; returns min wall seconds over ``repeats`` runs (fresh build
-    dir each; gVisor noise suppression). Builds fused
-    (materialize_bm25=False) — the production shape: the flat per-
-    term-doc postings table is a debugging artifact the query path
-    never reads, and round-tripping it doubles the biggest stage's
-    I/O."""
+    dir each; gVisor noise suppression)."""
     best = float("inf")
     for r in range(repeats):
         # IDENTICAL job config at every level — only the core count
@@ -125,8 +121,7 @@ def build_at(parallelism: int, pages_path: str, out_dir: str,
             pages = spark.read.parquet(pages_path)
             _warm_session(spark, parallelism)
             t0 = time.time()
-            build_persistent_index(spark, pages, target, verbose=False,
-                                   materialize_bm25=False)
+            build_persistent_index(spark, pages, target, verbose=False)
             best = min(best, time.time() - t0)
         finally:
             spark.stop()
@@ -171,6 +166,12 @@ def main() -> None:
         sf = 0.1
     n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES")
                   or max(400, int(sf * 800_000)))
+    # every bench session shares one local-mode JVM whose heap grows
+    # toward spark.driver.memory across builds; past physical RAM the
+    # OOM killer ends the JVM mid-run, so default to half the box
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM",
+                          f"{min(48 << 10, ram_mb // 2)}m")
 
     t_start = time.time()
     queries: dict[str, float] = {}
@@ -287,23 +288,6 @@ def main() -> None:
 
         head_pair("c")  # third spread sample, ~10 min after the first
 
-        # legacy-protocol datapoint: ONE local[4] build with the flat
-        # bm25_postings stage materialized (the round-1 build shape) so
-        # cross-round BASELINE.md rows stay directly comparable despite
-        # the fused-build/min-of-3 protocol change in round 2
-        spark = get_spark("bench-legacy4", master="local[4]",
-                          shuffle_partitions=16)
-        try:
-            t0 = time.time()
-            build_persistent_index(spark, spark.read.parquet(pages_path),
-                                   os.path.join(work, "idxleg"),
-                                   verbose=False, materialize_bm25=True)
-            queries["index_docs_per_sec_local4_materialized"] = round(
-                n_pages / (time.time() - t0), 1)
-        finally:
-            spark.stop()
-            shutil.rmtree(os.path.join(work, "idxleg"), ignore_errors=True)
-
         head_pair("d")  # fourth spread sample
 
         # -- 2. query latency over the built index -----------------------
@@ -313,8 +297,10 @@ def main() -> None:
         idx = load_index(spark, os.path.join(work, "idxs16"))
         comp = idx["postings_compressed"]
         dim = idx["doc_dim"]
+        nb = idx["stats"]["n_buckets"]
         # warm-up (JVM/codegen)
-        wand.run_wand(spark, BENCH_QUERIES[:1], comp, dim, k=100).collect()
+        wand.run_wand(spark, BENCH_QUERIES[:1], comp, dim, k=100,
+                      n_buckets=nb).collect()
         lats = []
         for qid, qtext in BENCH_QUERIES:
             best = float("inf")
@@ -325,7 +311,7 @@ def main() -> None:
                 # number is the reproducible one
                 t0 = time.time()
                 wand.run_wand(spark, [(qid, qtext)], comp, dim,
-                              k=100).collect()
+                              k=100, n_buckets=nb).collect()
                 best = min(best, time.time() - t0)
             lats.append(best)
         lats.sort()
@@ -337,7 +323,8 @@ def main() -> None:
             # single shot caught a multi-second gVisor stall (2.98 s vs
             # the same session's 1.5-1.8 s steady state)
             t0 = time.time()
-            wand.run_wand(spark, BENCH_QUERIES, comp, dim, k=100).collect()
+            wand.run_wand(spark, BENCH_QUERIES, comp, dim, k=100,
+                          n_buckets=nb).collect()
             best = min(best, time.time() - t0)
         queries["wand_batch_20q_sec"] = round(best, 4)
 

@@ -5,7 +5,7 @@
         --pages /data/pages_parquet --out /data/index \
         [--ngram-max 3] [--n-buckets 64] [--n-salts 8] [--n-shards 1] \
         [--n-extract-chunks 1] [--use-doc2query] [--synthetic N] \
-        [--materialize-bm25]
+        [--positional] [--anchor] [--bucket-tf] [--warm]
 
 The same script runs on a multi-executor cluster (north rule: "runs via
 spark-submit --py-files on multi-executor clusters") — only
@@ -15,6 +15,8 @@ sizing must come from spark-submit itself (--driver-memory; the
 builder-conf default only applies when a plain python process launches
 the JVM) — the 1 g spark-submit default OOMs on ~10^5-page corpora.
 Re-running with the same --out resumes from the last complete stage.
+``--n-buckets`` is recorded in ``corpus_stats.json``; the query and
+serving jobs read it from there and take no bucket count of their own.
 Prints one JSON line of per-stage lineage/row/byte metrics plus
 build_seconds (total build wall, excluding session startup).
 """
@@ -43,11 +45,6 @@ def main(argv: list[str] | None = None) -> int:
                          "indexing (DocumentIndex.py use_doc2query; "
                          "plug a real generator via "
                          "mlhooks.set_query_generator)")
-    ap.add_argument("--materialize-bm25", action="store_true",
-                    help="also commit the flat uncompressed bm25_postings "
-                         "table (one row per term-doc — doubles the "
-                         "biggest stage's I/O; the query path only needs "
-                         "postings_compressed)")
     ap.add_argument("--positional", action="store_true",
                     help="also commit the positional_postings stage "
                          "(bucket-partitioned body-token positions) for "
@@ -107,7 +104,6 @@ def main(argv: list[str] | None = None) -> int:
             n_shards=args.n_shards,
             n_extract_chunks=args.n_extract_chunks,
             use_doc2query=args.use_doc2query,
-            materialize_bm25=args.materialize_bm25,
             positional=args.positional, anchor=args.anchor,
             bucket_tf=args.bucket_tf, verbose=True)
         # total build wall (excludes session/JVM startup): the number a

@@ -6,8 +6,11 @@
 
 Replicates the reference's batch runner (batch_retrieve.py:11-38): TSV
 queries ``qid\\tquery`` in, one distributed scoring pass for ALL queries,
-TSV run file ``qid\\trank\\turl\\tscore`` out. ``--method wand`` uses the
-block-max WAND path over compressed postings (rank-identical to bm25).
+TSV run file ``qid\\trank\\turl\\tscore`` out. ``--method wand`` (and its
+alias ``bm25``) uses the block-max WAND path over compressed postings,
+rank-identical to the naive union-sum. The bucket-pruned scans (wand,
+phrase, bm25f) use the bucket count the index records in
+``corpus_stats.json``.
 ``--method phrase`` treats each query as one exact phrase and scores by
 occurrence count over the positional layer (requires an index built
 with ``--positional``) — one bucket-pruned pass for all phrases.
@@ -69,10 +72,12 @@ def main(argv: list[str] | None = None) -> int:
     try:
         idx = load_index(spark, args.index)
         queries = read_queries_tsv(spark, args.queries)
-        if args.method == "wand":
+        n_buckets = idx["stats"]["n_buckets"]
+        if args.method in ("wand", "bm25"):
             results = wand.run_wand(spark, queries,
                                     idx["postings_compressed"],
-                                    idx["doc_dim"], k=args.k)
+                                    idx["doc_dim"], k=args.k,
+                                    n_buckets=n_buckets)
         elif args.method == "phrase":
             # each query line is one exact phrase; score = occurrence
             # count over the positional layer, one pass for all queries
@@ -87,8 +92,7 @@ def main(argv: list[str] | None = None) -> int:
             phrases = [(qid, textlib.tokenize(q, 1)) for qid, q in queries]
             phrases = [(qid, toks) for qid, toks in phrases if toks]
             hits = phrase_ops.phrase_occurrences_batch(
-                idx["positional_postings"], phrases,
-                n_buckets=idx["stats"].get("n_buckets"))
+                idx["positional_postings"], phrases, n_buckets=n_buckets)
             results = qmod.topk(
                 hits.select("qid", "doc_id",
                             F.col("ptf").cast("double").alias("score")),
@@ -104,11 +108,10 @@ def main(argv: list[str] | None = None) -> int:
                 spark, queries, idx, k=args.k,
                 w_anchor=args.anchor_weight)
         else:
-            if args.method == "tfidf":
-                idx["tfidf"] = indexing.build_tfidf(idx["tf"],
-                                                    idx["term_stats"])
+            idx["tfidf"] = indexing.build_tfidf(idx["tf"],
+                                                idx["term_stats"])
             results = qmod.run_batch(spark, queries, idx, k=args.k,
-                                     method=args.method)
+                                     method="tfidf")
         if args.rerank_diversity is not None:
             results = _rerank_results(
                 spark, args.index, results, 1.0 - args.rerank_diversity)

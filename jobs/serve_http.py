@@ -3,14 +3,14 @@ index — the reference's ``manage.py runserver`` analog
 (SearchEngineServer/api/views.py:34-88, urls.py).
 
     spark-submit --py-files mse.zip jobs/serve_http.py \
-        --index /data/index [--host 0.0.0.0] [--port 8000] \
-        [--n-buckets 64]
+        --index /data/index [--host 0.0.0.0] [--port 8000]
 
 The Spark session outlives requests exactly as the reference's Django
 worker keeps its unpickled index resident; each ``POST /search`` is a
 driver-coordinated top-k job, each ``POST /summarize`` a single-doc
 lookup + summarizer hook. Endpoint/error contract documented in
-``modern_search_engines_spark/plans/http_api.py``.
+``modern_search_engines_spark/plans/http_api.py``. Bucket pruning uses
+the bucket count the index records in ``corpus_stats.json``.
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--index", required=True)
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8000)
-    ap.add_argument("--n-buckets", type=int, default=64)
     args = ap.parse_args(argv)
 
     from modern_search_engines_spark.plans.http_api import serve
@@ -31,7 +30,7 @@ def main(argv: list[str] | None = None) -> int:
     from modern_search_engines_spark.session import get_spark
 
     spark = get_spark("mse-serve-http")
-    service = SearchService(spark, args.index, n_buckets=args.n_buckets)
+    service = SearchService(spark, args.index)
     server = serve(service, host=args.host, port=args.port)
     print(f"serving on http://{server.server_address[0]}:"
           f"{server.server_address[1]} (POST /search, POST /summarize)")

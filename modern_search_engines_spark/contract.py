@@ -19,9 +19,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .operators.indexing import bm25_saturation
 from .operators.topk import ranked_topk
+from .oracle.engine import B, K1
 
-K1, B = 1.5, 0.75
 BM25_QUERY_TERMS = ("data", "query", "spark")
 from .operators.quality import (  # single source for the quality exprs
     DE_STOPWORD_SAMPLE as DE_SAMPLE,
@@ -134,9 +135,8 @@ def q_bm25_topk(spark, sf):
            .withColumn("idf", F.log(F.lit(float(n)) / F.col("df"))))
     qterms = spark.createDataFrame(
         [(t,) for t in BM25_QUERY_TERMS], "term string")
-    tf_ = F.col("tf").cast("double")
-    sat = (tf_ * (K1 + 1)) / (
-        tf_ + K1 * (1 - B + B * F.col("dl").cast("double") / F.lit(float(avgdl))))
+    sat = bm25_saturation(F.col("tf").cast("double"),
+                          F.col("dl").cast("double"), avgdl)
     scored = (
         tf.join(F.broadcast(qterms), "term")
         .join(dl, "doc_id").join(idf.select("term", "idf"), "term")
@@ -1200,10 +1200,8 @@ def q_bm25_conj_topk(spark, sf):
            .withColumn("idf", F.log(F.lit(float(n)) / F.col("df"))))
     qterms = spark.createDataFrame(
         [(t,) for t in BM25_QUERY_TERMS], "term string")
-    tf_ = F.col("tf").cast("double")
-    sat = (tf_ * (K1 + 1)) / (
-        tf_ + K1 * (1 - B + B * F.col("dl").cast("double")
-                    / F.lit(float(avgdl))))
+    sat = bm25_saturation(F.col("tf").cast("double"),
+                          F.col("dl").cast("double"), avgdl)
     scored = (
         tf.join(F.broadcast(qterms), "term")
         .join(dl, "doc_id").join(idf.select("term", "idf"), "term")
@@ -1356,8 +1354,7 @@ def q_bm25f_topk(spark, sf):
                    .alias("idf")))
     qterms = spark.createDataFrame(
         [(t,) for t in BM25_QUERY_TERMS], "term string")
-    scored = bm25f.score_bm25f(wtf, wdl, idf, qterms,
-                               avg_wdl=avg_wdl, k1=K1, b=B)
+    scored = bm25f.score_bm25f(wtf, wdl, idf, qterms, avg_wdl=avg_wdl)
     return ranked_topk(scored, [F.desc("score"), F.asc("doc_id")],
                        BM25F_TOPK, key_col="doc_id").select(
                            "doc_id", "score", "rank")

@@ -33,9 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# repo-wide BM25 constants (contract.K1/B; reference BM25Ranker.py)
-K1_DEFAULT = 1.5
-B_DEFAULT = 0.75
+from .indexing import bm25_saturation
 
 
 def combine_fields(fields: list[tuple[DataFrame, float]],
@@ -73,17 +71,13 @@ def combine_doc_lengths(lengths: list[tuple[DataFrame, float]],
 
 
 def score_bm25f(wtf: DataFrame, wdl: DataFrame, idf: DataFrame,
-                query_terms: DataFrame, *, avg_wdl: float,
-                k1: float = K1_DEFAULT, b: float = B_DEFAULT) -> DataFrame:
+                query_terms: DataFrame, *, avg_wdl: float) -> DataFrame:
     """Score combined-field tfs: one broadcast join on the query's
     terms, one doc_id-keyed join for wdl, one term-keyed join for idf,
     one (doc_id) sum — the identical plan family as the single-field
     BM25 path. Returns (doc_id, score) with score rounded to 6dp (the
     repo's cross-engine float contract)."""
-    sat = (F.col("wtf") * F.lit(k1 + 1.0)
-           / (F.col("wtf") + F.lit(k1)
-              * (F.lit(1.0 - b) + F.lit(b) * F.col("wdl")
-                 / F.lit(float(avg_wdl)))))
+    sat = bm25_saturation(F.col("wtf"), F.col("wdl"), avg_wdl)
     return (wtf.join(F.broadcast(query_terms), "term")
             .join(wdl, "doc_id")
             .join(idf, "term")
@@ -93,9 +87,7 @@ def score_bm25f(wtf: DataFrame, wdl: DataFrame, idf: DataFrame,
 
 def run_bm25f_batch(spark, queries: list[tuple[str, str]], index: dict,
                     k: int = 100, w_body: float = 1.0,
-                    w_anchor: float = 2.0, k1: float = K1_DEFAULT,
-                    b: float = B_DEFAULT,
-                    n_buckets: int | None = None) -> DataFrame:
+                    w_anchor: float = 2.0) -> DataFrame:
     """Batch BM25F retrieval over a built index with an anchor field
     (``build_persistent_index(anchor=True)``): body tf (stage ``tf``) +
     anchor tf (stage ``anchor_field``) combined before saturation,
@@ -111,22 +103,25 @@ def run_bm25f_batch(spark, queries: list[tuple[str, str]], index: dict,
     as a union + one (qid, doc_id, term) groupBy (one shuffle, no
     null-key full-outer gymnastics), then doc_id-keyed norms join and
     the same per-(qid, doc) sum as the single-field path. avg_wdl is
-    one tiny aggregate over field_norms (all indexed docs)."""
+    one tiny aggregate over field_norms (all indexed docs); an empty
+    field_norms (an index with no indexed docs) raises ValueError."""
     from . import query as q
 
     rows = q.query_term_rows(queries)
     terms = spark.createDataFrame(
         rows, "qid string, term string, qtf long, w double")
-    anchor = index["anchor_field"]
-    if n_buckets is None:
-        n_buckets = int(index["stats"].get("n_buckets", 64))
-    anchor = q.prune_postings(anchor, terms, n_buckets,
+    n_buckets = index["stats"]["n_buckets"]
+    anchor = q.prune_postings(index["anchor_field"], terms, n_buckets,
                               term_list=[r[1] for r in rows])
-    norms = index["field_norms"]
-    avg_wdl = float(norms.select(
-        F.avg(F.col("doc_len").cast("double") * F.lit(float(w_body))
-              + F.col("anchor_len").cast("double")
-              * F.lit(float(w_anchor))).alias("a")).collect()[0][0])
+    wdl = index["field_norms"].select(
+        "doc_id",
+        (F.col("doc_len").cast("double") * F.lit(float(w_body))
+         + F.col("anchor_len").cast("double")
+         * F.lit(float(w_anchor))).alias("wdl"))
+    avg_wdl = wdl.agg(F.avg("wdl")).collect()[0][0]
+    if avg_wdl is None:
+        raise ValueError("bm25f: the index's field_norms stage is empty "
+                         "(no indexed documents to score)")
     body_tf = index["tf"]
     if "bucket" in body_tf.columns:
         # bucket-partitioned tf layout (build's bucket_tf=True): the
@@ -148,16 +143,8 @@ def run_bm25f_batch(spark, queries: list[tuple[str, str]], index: dict,
            .groupBy("qid", "doc_id", "term")
            .agg(F.sum("part").alias("wtf"),
                 F.max("qtf").alias("qtf"), F.max("w").alias("w")))
-    wdl = norms.select(
-        "doc_id",
-        (F.col("doc_len").cast("double") * F.lit(float(w_body))
-         + F.col("anchor_len").cast("double")
-         * F.lit(float(w_anchor))).alias("wdl"))
     idf = index["term_stats"].select("term", "idf")
-    sat = (F.col("wtf") * F.lit(k1 + 1.0)
-           / (F.col("wtf") + F.lit(k1)
-              * (F.lit(1.0 - b) + F.lit(b) * F.col("wdl")
-                 / F.lit(avg_wdl))))
+    sat = bm25_saturation(F.col("wtf"), F.col("wdl"), avg_wdl)
     scored = (wtf.join(wdl, "doc_id")
               .join(F.broadcast(idf.join(
                   terms.select("term").distinct(), "term")), "term")

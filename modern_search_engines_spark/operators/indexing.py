@@ -197,14 +197,22 @@ def build_doc_fields(indexed_docs: DataFrame, avg_date_ts: float | None,
     )
 
 
+def bm25_saturation(tf, dl, avg_dl: float):
+    """BM25's tf saturation (k1+1)·tf / (tf + k1·(1 − b + b·dl/avg_dl))
+    over double Columns — the one Spark-side definition every BM25 and
+    BM25F path multiplies by idf (BM25Ranker.py:18-26). Its evaluation
+    order is part of the index format: the compressed postings store
+    these doubles."""
+    return (tf * (K1 + 1)) / (
+        tf + K1 * (1 - B + B * (dl / F.lit(float(avg_dl)))))
+
+
 def _partial_score_expr(avgdl: float):
     """The idf-LESS BM25 partial: recency × field-weight × tf-saturation
-    (BM25Ranker.py:18-26 minus the idf factor). Kept as one shared
-    expression so the flat-table path (× idf here) and the deferred
-    path (× idf after aggregation) multiply the SAME double and stay
-    bit-identical. Field weights use higher-order functions over the
-    doc-level membership arrays (F8: ×2 title, ×1.6 per heading level,
-    ×1.2 per emphasis class, compounding)."""
+    (BM25Ranker.py:18-26 minus the idf factor). Field weights use
+    higher-order functions over the doc-level membership arrays (F8: ×2
+    title, ×1.6 per heading level, ×1.2 per emphasis class,
+    compounding)."""
     t = F.col("term")
     in_title = F.array_contains("title_terms", t)
     nh = F.size(F.filter("heading_terms",
@@ -216,10 +224,8 @@ def _partial_score_expr(avgdl: float):
         * F.pow(F.lit(1.6), nh.cast("double"))
         * F.pow(F.lit(1.2), ne.cast("double"))
     )
-    tf_ = F.col("tf").cast("double")
-    sat = (tf_ * (K1 + 1)) / (
-        tf_ + K1 * (1 - B + B * (F.col("doc_len").cast("double")
-                                 / F.lit(float(avgdl)))))
+    sat = bm25_saturation(F.col("tf").cast("double"),
+                          F.col("doc_len").cast("double"), avgdl)
     return F.col("recency") * weight * sat
 
 
@@ -275,20 +281,17 @@ def build_bm25_postings(tf: DataFrame, term_stats: DataFrame,
                         doc_len: DataFrame, doc_fields: DataFrame,
                         avgdl: float, n_buckets: int = 64,
                         broadcast_doc_dims: bool = False) -> DataFrame:
-    """(term, bucket, doc_id, score) — the materialized BM25 scores
-    (BM25Ranker.py:18-26), all JVM-side arithmetic: the idf-less
-    partial (``build_bm25_partials``) × idf as the final multiplicand,
-    so this flat table is bit-identical to what the deferred-idf fused
-    path feeds the codec."""
+    """(term, bucket, doc_id, score) — the flat BM25 scores
+    (BM25Ranker.py:18-26) of ``build_index``, the naive reference the
+    tests hold the compressed index to: the idf-less partial
+    (``build_bm25_partials``) × idf, the same double product the
+    compressed stage stores."""
     return (
-        _doc_dim_join(tf, doc_len, doc_fields, broadcast_doc_dims)
+        build_bm25_partials(tf, doc_len, doc_fields, avgdl, n_buckets,
+                            broadcast_doc_dims)
         .join(term_stats.select("term", "idf"), "term")
-        .select(
-            "term",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("bucket"),
-            "doc_id",
-            (_partial_score_expr(avgdl) * F.col("idf")).alias("score"),
-        )
+        .select("term", "bucket", "doc_id",
+                (F.col("score") * F.col("idf")).alias("score"))
     )
 
 

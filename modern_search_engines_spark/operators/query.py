@@ -47,13 +47,16 @@ def query_terms_df(spark: SparkSession, queries: list[tuple[str, str]],
 
 
 def prune_postings(postings: DataFrame, terms: DataFrame,
-                   n_buckets: int = 64,
+                   n_buckets: int | None = None,
                    term_list: list[str] | None = None) -> DataFrame:
     """Partition-prune the postings scan to the query terms' buckets.
 
     ``bucket`` is the postings table's partition column, so this predicate
     becomes parquet partition pruning — only the matching bucket
-    directories are read (SURVEY.md §4 "bucketed postings").
+    directories are read (SURVEY.md §4 "bucketed postings"). The bucket
+    count must be the one the table was built with (a built index
+    records it in ``corpus_stats.json``); ``n_buckets=None`` returns the
+    table unpruned — a full, correct scan.
 
     Bucket ids come from the pure-python xxhash64 twin
     (``functions.hashing``, canary-checked against the JVM) when the term
@@ -64,6 +67,8 @@ def prune_postings(postings: DataFrame, terms: DataFrame,
     """
     from ..functions import hashing
 
+    if n_buckets is None:
+        return postings
     if term_list is not None and hashing.self_check():
         buckets = sorted({hashing.bucket_of(t, n_buckets)
                           for t in term_list})
@@ -121,19 +126,21 @@ def attach_documents(topk_df: DataFrame, docs: DataFrame) -> DataFrame:
 
 def run_batch(spark: SparkSession, queries: list[tuple[str, str]],
               index: dict, k: int = 100, method: str = "bm25",
-              n_buckets: int = 64, prune: bool = True) -> DataFrame:
+              n_buckets: int | None = None) -> DataFrame:
     """Full batch retrieval (§3.3): one scoring pass for all queries.
 
-    Returns (qid, rank, doc_id, score) ordered for the TSV run-file sink.
+    ``method="bm25"`` is the naive union-sum over the flat
+    ``bm25_postings`` of ``indexing.build_index`` — the reference the
+    WAND path over a built index is tested against; ``n_buckets``
+    prunes it as in ``prune_postings``. Returns (qid, rank, doc_id,
+    score) ordered for the TSV run-file sink.
     """
     rows = query_term_rows(queries)
     terms = spark.createDataFrame(
         rows, "qid string, term string, qtf long, w double")
     if method == "bm25":
-        postings = index["bm25_postings"]
-        if prune and "bucket" in postings.columns:
-            postings = prune_postings(postings, terms, n_buckets,
-                                      term_list=[r[1] for r in rows])
+        postings = prune_postings(index["bm25_postings"], terms, n_buckets,
+                                  term_list=[r[1] for r in rows])
         scored = score_bm25(postings, terms)
     elif method == "tfidf":
         scored = score_tfidf(index["tfidf"], index["term_stats"], terms)

@@ -309,11 +309,12 @@ def _rows_to_cursors(pdf: pd.DataFrame) -> list[PostingCursor]:
 
 def run_wand(spark: SparkSession, queries: list[tuple[str, str]],
              compressed: DataFrame, doc_dim: DataFrame, k: int = 100,
-             n_buckets: int = 64, prune: bool = True) -> DataFrame:
+             n_buckets: int | None = None) -> DataFrame:
     """Batch block-max-WAND retrieval over the compressed postings.
 
     One pass for all queries: broadcast the (qid, term, mult) side onto
-    the bucket-pruned compressed scan, then ``applyInPandas`` per
+    the compressed scan, bucket-pruned when ``n_buckets`` (the index's
+    recorded bucket count) is given, then ``applyInPandas`` per
     (qid, shard) runs WAND, and a final window merges shard top-ks.
     Returns (qid, rank, doc_id, score).
     """
@@ -325,10 +326,8 @@ def run_wand(spark: SparkSession, queries: list[tuple[str, str]],
     terms = terms.select(
         "qid", "term",
         (F.col("qtf").cast("double") * F.col("w")).alias("mult"))
-    work = compressed
-    if prune and "bucket" in compressed.columns:
-        work = qmod.prune_postings(compressed, terms, n_buckets,
-                                   term_list=[r[1] for r in rows])
+    work = qmod.prune_postings(compressed, terms, n_buckets,
+                               term_list=[r[1] for r in rows])
     joined = work.join(F.broadcast(terms), "term")
 
     def _wand_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1,7 +1,7 @@
 """The staged, resumable index build — the engine's §3.1 entry point.
 
-pages → extracted → tf → term_stats/doc_len → bm25_postings →
-postings_compressed (+ docs dim, doc_dim mapping), each stage an atomic
+pages → extracted → tf → term_stats/doc_len → postings_compressed
+(+ docs display table and the derived doc_dim mapping), each stage an atomic
 parquet commit with manifest/lineage/metrics (``sources.tables``), so a
 killed build resumes from the last complete stage and the final tables
 are byte-identical to an uninterrupted run (SURVEY.md §5.6).
@@ -34,7 +34,6 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
                            n_buckets: int = 64, n_salts: int = 8,
                            n_shards: int = 1, n_extract_chunks: int = 1,
                            use_doc2query: bool = False,
-                           materialize_bm25: bool = True,
                            positional: bool = False,
                            anchor: bool = False,
                            bucket_tf: bool = False,
@@ -46,15 +45,15 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
     extraction resumes from the last complete chunk instead of
     restarting the stage (sources/tables.py write_stage_chunked).
 
-    ``materialize_bm25=False`` fuses the uncompressed-postings stage
-    into the compressed one: the BM25 scoring plan feeds
-    ``build_compressed_postings`` directly instead of round-tripping
-    the index's biggest intermediate table (one row per (term, doc) —
-    tf-sized) through parquet. At 100-TB scale that round-trip doubles
-    the I/O of the largest stage; skip it unless the flat postings
-    table itself is wanted (debugging, the naive scoring path, the
-    correctness twin). Resume granularity becomes
-    extracted → tf → postings_compressed.
+    The idf-less BM25 partials feed ``build_compressed_postings``
+    directly — the index's biggest intermediate (one row per (term,
+    doc), tf-sized) is never round-tripped through parquet — and idf is
+    multiplied in after the per-(term, bucket) aggregation. Resume
+    granularity is extracted → tf → postings_compressed.
+
+    ``n_buckets`` is recorded in ``corpus_stats.json``; every reader
+    (``load_index``, the serving tiers, the query jobs) takes the
+    bucket count from there.
 
     ``use_doc2query`` mirrors ``DocumentIndex.py:47-66`` (where it
     defaults ON): after corpus averages, every indexed doc's token
@@ -92,8 +91,8 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
                 s = json.load(f)
         else:
             s = indexing.corpus_stats(indexed_raw)
-        # record n_buckets so load_index can rebuild the flat bm25 plan
-        # for fused indexes with the bucket key the compressed table uses
+        # record n_buckets: the single source of the bucket count for
+        # every reader that prunes a term-hash-bucketed table
         if s.get("n_buckets") != n_buckets:
             s["n_buckets"] = n_buckets
             # temp + atomic rename, like every stage commit: a kill mid-
@@ -205,61 +204,37 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
             "field_norms", inputs=("tf", "anchor_field"),
             sort_within=["doc_id"])
 
-    # term_stats is a deterministic derivation of tf, so the bm25 stage
-    # consumes its own inline term-stats plan (identical result) and the
-    # term_stats TABLE is committed concurrently instead of serializing
-    # another job barrier before bm25. Lineage via tf covers both.
+    # term_stats is a deterministic derivation of tf, so the compressed
+    # stage consumes its own inline term-stats plan (identical result)
+    # and the term_stats TABLE is committed concurrently instead of
+    # serializing another job barrier. Lineage via tf covers both.
     term_stats_plan = indexing.build_term_stats(tf, stats["N"])
     doc_len = indexing.build_doc_len(tf)  # cheap, derived on the fly
     doc_fields = indexing.build_doc_fields(indexed_raw,
                                            stats["avg_date_ts"])
-
-    # flat write (term-sorted within partitions, NOT dir-partitioned by
-    # bucket): this table is the correctness twin + the compressed
-    # stage's input, never the latency-critical scan — the query path
-    # prunes postings_compressed. Dir-partitioning it cost an extra
-    # full-table shuffle + a 64-directory small-file write for nothing.
-    bm25_plan = indexing.build_bm25_postings(tf, term_stats_plan, doc_len,
-                                             doc_fields, stats["avgdl"],
-                                             n_buckets)
+    # deferred idf: the idf-LESS partials go in, and the compressed stage
+    # broadcast-joins term_stats onto the per-(term,bucket) aggregate —
+    # the vocabulary join never touches the posting-sized fact table
+    # (see build_bm25_partials)
+    partials = indexing.build_bm25_partials(tf, doc_len, doc_fields,
+                                            stats["avgdl"], n_buckets)
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_ts = pool.submit(sw.write_stage, term_stats_plan, "term_stats",
                            inputs=("tf",))
-        if materialize_bm25:
-            bm25 = sw.write_stage(bm25_plan, "bm25_postings",
-                                  inputs=("tf",), sort_within=["term"],
-                                  params={"n_buckets": n_buckets})
-            compressed_input, compressed_lineage = bm25, ("bm25_postings",)
-            defer_stats = None  # scores in the flat table carry idf
-        else:
-            # a stale flat table from a prior materialized build must not
-            # survive a fused rebuild — load_index would silently serve
-            # the old corpus to the naive-bm25 path
-            sw.drop_stage("bm25_postings")
-            bm25 = bm25_plan  # queryable plan, never round-tripped
-            # deferred idf: feed the idf-LESS partials and let the
-            # compressed stage broadcast-join term_stats onto the
-            # per-(term,bucket) aggregate — the vocabulary join never
-            # touches the posting-sized fact table (bit-identical
-            # output; see build_bm25_partials)
-            compressed_input = indexing.build_bm25_partials(
-                tf, doc_len, doc_fields, stats["avgdl"], n_buckets)
-            compressed_lineage = ("tf",)
-            defer_stats = term_stats_plan
         # n_buckets (and sharding) live in the stage params: resuming
         # the same out_dir with a different bucket count must rebuild
-        # these stages, not skip them and leave the on-disk layout
+        # this stage, not skip it and leave the on-disk layout
         # disagreeing with the n_buckets recorded in corpus_stats.json
         # pre_partitioned: the compressed plan already ends in a
         # repartition("bucket") that its merge aggregate reuses — the
         # writer must not shuffle every blob a second time
         compressed = sw.write_stage(
-            postings.build_compressed_postings(compressed_input,
+            postings.build_compressed_postings(partials,
                                                n_salts=n_salts,
                                                n_shards=n_shards,
                                                n_buckets=n_buckets,
-                                               term_stats=defer_stats),
-            "postings_compressed", inputs=compressed_lineage,
+                                               term_stats=term_stats_plan),
+            "postings_compressed", inputs=("tf",),
             partition_by=["bucket"], sort_within=["term", "shard"],
             params={"n_buckets": n_buckets, "n_shards": n_shards},
             pre_partitioned=True)
@@ -276,7 +251,6 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
         "docs": docs,
         "tf": tf,
         "term_stats": term_stats,
-        "bm25_postings": bm25,
         "postings_compressed": compressed,
         "doc_dim": doc_dim,
         "positional_postings": positional_tbl,
@@ -286,46 +260,31 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
     }
 
 
+def read_stats(index_dir: str) -> dict:
+    """The index's ``corpus_stats.json`` — N, avgdl, avg_date_ts and the
+    bucket count every bucket-pruned reader uses. An index without a
+    recorded ``n_buckets`` is refused: guessing one would prune away
+    postings and answer wrongly without any error."""
+    path = os.path.join(index_dir, STATS_FILE)
+    with open(path) as f:
+        stats = json.load(f)
+    if "n_buckets" not in stats:
+        raise ValueError(f"{path} records no n_buckets; rebuild the index")
+    return stats
+
+
 def load_index(spark: SparkSession, out_dir: str) -> dict:
     """Open a previously built index directory."""
-    with open(os.path.join(out_dir, STATS_FILE)) as f:
-        stats = json.load(f)
-    from ..operators import postings as post
-
+    stats = read_stats(out_dir)
     rd = lambda n: spark.read.parquet(os.path.join(out_dir, n))  # noqa: E731
     docs = rd("docs")
-    tf = rd("tf")
-    if os.path.exists(os.path.join(out_dir, "bm25_postings")):
-        bm25 = rd("bm25_postings")
-    elif "n_buckets" in stats:
-        # fused builds (materialize_bm25=False) never wrote the flat
-        # table; rebuild the SAME lazy scoring plan the compressed stage
-        # consumed so run_batch(method='bm25') works on a fused index —
-        # identical partials (the fused stage fed this exact plan), just
-        # computed from tf at query time instead of read from parquet
-        indexed_raw = indexing.filter_index_docs(rd("extracted"))
-        bm25 = indexing.build_bm25_postings(
-            tf, indexing.build_term_stats(tf, stats["N"]),
-            indexing.build_doc_len(tf),
-            indexing.build_doc_fields(indexed_raw, stats["avg_date_ts"]),
-            stats["avgdl"], stats["n_buckets"])
-    else:
-        # pre-n_buckets fused index: guessing a bucket count would make
-        # pruned naive-bm25 queries silently wrong — surface None (the
-        # WAND/compressed path is unaffected) like the pre-change code
-        bm25 = None
-    # back-compat: older indexes materialized doc_dim as its own table
-    dim_path = os.path.join(out_dir, "doc_dim")
-    doc_dim = (rd("doc_dim") if os.path.exists(dim_path)
-               else post.doc_dim_from_docs(docs))
     return {
         "stats": stats,
         "docs": docs,
-        "tf": tf,
+        "tf": rd("tf"),
         "term_stats": rd("term_stats"),
-        "bm25_postings": bm25,
         "postings_compressed": rd("postings_compressed"),
-        "doc_dim": doc_dim,
+        "doc_dim": postings.doc_dim_from_docs(docs),
         "positional_postings": (
             rd("positional_postings")
             if os.path.exists(os.path.join(out_dir, "positional_postings"))

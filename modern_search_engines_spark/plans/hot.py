@@ -8,7 +8,8 @@ architecture a real deployment uses for interactive latency: **Spark
 builds and maintains the index; the serving tier reads it directly.**
 
 Per query: tokenize driver-side (``query.query_term_rows``), hash the
-terms to their buckets with the pure-python xxhash64 twin
+terms to their buckets (the bucket count the index records in
+``corpus_stats.json``) with the pure-python xxhash64 twin
 (``functions/hashing`` — canary-checked against the JVM), read ONLY the
 matching ``bucket=<b>`` parquet directories with pyarrow (dir-level
 pruning, the same pruning the Spark scan does), and score with a
@@ -39,6 +40,7 @@ import pyarrow.parquet as pq
 
 from ..functions import codec, hashing
 from ..operators import query as qmod
+from .build import read_stats
 
 _BLOB_COLS = ["term", "shard", "n", "ids_blob", "scores_blob",
               "block_first", "block_max", "block_off"]
@@ -47,11 +49,10 @@ _BLOB_COLS = ["term", "shard", "n", "ids_blob", "scores_blob",
 class HotSearcher:
     """Answer single BM25 queries from a built index dir without Spark."""
 
-    def __init__(self, index_dir: str, n_buckets: int = 64,
-                 max_cached_buckets: int = 64,
+    def __init__(self, index_dir: str, max_cached_buckets: int = 64,
                  max_cached_doc_ids: int = 65536):
         self.index_dir = index_dir
-        self.n_buckets = n_buckets
+        self.n_buckets = read_stats(index_dir)["n_buckets"]
         self.max_cached_buckets = max_cached_buckets
         self.max_cached_doc_ids = max_cached_doc_ids
         self._buckets: dict[int, dict[str, list[dict]]] = {}
@@ -207,9 +208,9 @@ class HotSearchService:
 
     DISPLAY_COLS = ("url", "title", "description", "icon_url")
 
-    def __init__(self, index_dir: str, n_buckets: int = 64):
+    def __init__(self, index_dir: str):
         self.index_dir = index_dir
-        self.searcher = HotSearcher(index_dir, n_buckets=n_buckets)
+        self.searcher = HotSearcher(index_dir)
 
     def _display_rows(self, doc_ids: list[str]) -> dict[str, dict]:
         import pyarrow.dataset as ds
@@ -231,6 +232,8 @@ class HotSearchService:
                 "diversity reranking needs the Spark-backed "
                 "SearchService (LDA topic table)")
         ranked = self.searcher.search(query, top_k=top_k)
+        if not ranked:  # an empty isin() filter is an Arrow type error
+            return []
         rows = self._display_rows([d for d, _ in ranked])
         return [{
             "url": rows[d]["url"], "url_hash": d,

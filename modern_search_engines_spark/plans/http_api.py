@@ -35,13 +35,17 @@ interactive-latency serving without a Spark job per request, point the
 same app at ``plans.hot.HotSearchService`` — the app only needs
 ``search()`` and ``summarize()``. A service raising ValueError (bad
 request parameters, e.g. the hot tier refusing tfidf) maps to 400;
-other exceptions map to 500 like Django's unhandled-exception path.
+other exceptions map to 500 like Django's unhandled-exception path, and
+their tracebacks go to this module's logger.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 from collections.abc import Callable, Iterable
+
+log = logging.getLogger(__name__)
 
 _STATUS = {200: "200 OK", 400: "400 Bad Request", 404: "404 Not Found",
            405: "405 Method Not Allowed",
@@ -130,6 +134,7 @@ def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
             return _json_response(start_response, 400,
                                   {"error": str(exc)})
         except Exception as exc:  # parity: Django turns these into 500s
+            log.exception("%s failed", path)
             return _json_response(start_response, 500,
                                   {"error": str(exc)})
         return _json_response(start_response, status, payload)
@@ -144,9 +149,10 @@ def serve(service, host: str = "127.0.0.1", port: int = 8000):
     ``serve_forever()`` on it."""
     from wsgiref.simple_server import WSGIServer, make_server
 
-    class _QuietServer(WSGIServer):
-        def handle_error(self, request, client_address):  # no stderr spam
-            pass
+    class _LoggingServer(WSGIServer):
+        def handle_error(self, request, client_address):
+            log.exception("error serving a request from %s",
+                          client_address)
 
     return make_server(host, port, make_wsgi_app(service),
-                       server_class=_QuietServer)
+                       server_class=_LoggingServer)

@@ -34,11 +34,9 @@ DISPLAY_COLS = ("url", "title", "description", "icon_url")
 class SearchService:
     """One loaded index directory; ``search()`` per query."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 n_buckets: int = 64):
+    def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self.n_buckets = n_buckets
         self.idx = load_index(spark, index_dir)
         self.docs = self.idx["docs"].select("doc_id", *DISPLAY_COLS)
         self._tfidf = None
@@ -91,7 +89,8 @@ class SearchService:
     def _search_bm25(self, q: str, top_k: int) -> list[dict]:
         ranked = wand.run_wand(
             self.spark, [("q", q)], self.idx["postings_compressed"],
-            self.idx["doc_dim"], k=top_k, n_buckets=self.n_buckets)
+            self.idx["doc_dim"], k=top_k,
+            n_buckets=self.idx["stats"]["n_buckets"])
         return self._results(ranked.select("doc_id", "score"))
 
     def _search_tfidf(self, q: str, top_k: int) -> list[dict]:
@@ -116,9 +115,8 @@ class SearchService:
                 "(build_persistent_index(..., anchor=True) or "
                 "jobs/build_index.py --anchor)")
         from ..operators import bm25f
-        ranked = bm25f.run_bm25f_batch(
-            self.spark, [("q", q)], self.idx, k=top_k,
-            n_buckets=self.n_buckets)
+        ranked = bm25f.run_bm25f_batch(self.spark, [("q", q)], self.idx,
+                                       k=top_k)
         return self._results(ranked.select("doc_id", "score"))
 
     def phrase_search(self, phrase: str, top_k: int = 20) -> list[dict]:
@@ -139,8 +137,8 @@ class SearchService:
         toks = textlib.tokenize(phrase, 1)
         if not toks:
             return []
-        ranked = phrase_ops.phrase_topk(ptok, toks, k=top_k,
-                                        n_buckets=self.n_buckets)
+        ranked = phrase_ops.phrase_topk(
+            ptok, toks, k=top_k, n_buckets=self.idx["stats"]["n_buckets"])
         return self._results(
             ranked.select("doc_id",
                           F.col("ptf").cast("double").alias("score")))

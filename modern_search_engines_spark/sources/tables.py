@@ -107,8 +107,9 @@ class StageWriter:
     def drop_stage(self, name: str) -> None:
         """Remove a stage's data + manifest (and any stale tmp dir).
         Used when a build variant makes an existing stage obsolete —
-        e.g. a fused rebuild must not leave a prior flat bm25_postings
-        table for load_index to serve against the new corpus."""
+        e.g. a non-positional rebuild must not leave a prior
+        positional_postings table for load_index to serve against the
+        new corpus."""
         final, tmp, _ = self._paths(name)
         for p in (final, tmp):
             if os.path.exists(p):

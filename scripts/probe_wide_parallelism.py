@@ -101,8 +101,7 @@ def main() -> None:
                 t0 = time.time()
                 build_persistent_index(
                     spark, spark.read.parquet(pages_path),
-                    os.path.join(work, f"idx{cores}"), verbose=False,
-                    materialize_bm25=False)
+                    os.path.join(work, f"idx{cores}"), verbose=False)
                 wall = time.time() - t0
             finally:
                 spark.stop()

@@ -11,8 +11,9 @@ corpus:
    is heavily skewed — the exact shape the map-side-combinable
    (dst, term) count is built for.
 2. QUERY COST — 20-query batch BM25F (run_bm25f_batch, anchor scan
-   bucket-pruned) vs the same batch through the flat-bm25 path, min-of-2
-   each, alternating: what the second field costs at query time.
+   bucket-pruned) vs the same batch through the bm25 WAND path over the
+   compressed postings, min-of-2 each, alternating: what the second
+   field costs at query time.
 
 Prints one JSON line. Usage:
     python scripts/scale_anchor.py [--sizes 8000,80000] [--cpus 16]
@@ -50,7 +51,7 @@ def main() -> int:
     sizes = [int(s) for s in args.sizes.split(",")]
 
     from modern_search_engines_spark import corpus
-    from modern_search_engines_spark.operators import bm25f, query as qmod
+    from modern_search_engines_spark.operators import bm25f, wand
     from modern_search_engines_spark.plans.build import (
         build_persistent_index,
         load_index,
@@ -80,8 +81,7 @@ def main() -> int:
                     t0 = time.time()
                     build_persistent_index(
                         spark, pages, idx_dir, verbose=False,
-                        n_buckets=N_BUCKETS, anchor=anchor,
-                        materialize_bm25=True)
+                        n_buckets=N_BUCKETS, anchor=anchor)
                     walls[anchor].append(time.time() - t0)
                     if not (anchor and rep == 1):
                         shutil.rmtree(idx_dir, ignore_errors=True)
@@ -97,7 +97,7 @@ def main() -> int:
                 out[f"{st}_sec_{n}"] = m.get("seconds", -1.0)
                 out[f"{st}_rows_{n}"] = m.get("rows", -1)
 
-            # -- 2. query cost: bm25f vs flat bm25, alternating -------
+            # -- 2. query cost: bm25f vs bm25 (WAND), alternating -----
             idx = load_index(spark, keep)
             ts: dict[str, list[float]] = {"bm25f": [], "bm25": []}
             for _ in range(2):
@@ -105,9 +105,9 @@ def main() -> int:
                 bm25f.run_bm25f_batch(spark, QUERIES, idx, k=100).collect()
                 ts["bm25f"].append(time.time() - t0)
                 t0 = time.time()
-                qmod.run_batch(spark, QUERIES, idx, k=100,
-                               method="bm25", n_buckets=N_BUCKETS) \
-                    .collect()
+                wand.run_wand(spark, QUERIES, idx["postings_compressed"],
+                              idx["doc_dim"], k=100,
+                              n_buckets=idx["stats"]["n_buckets"]).collect()
                 ts["bm25"].append(time.time() - t0)
             for tag in ("bm25f", "bm25"):
                 out[f"batch20_{tag}_sec_{n}"] = round(min(ts[tag]), 3)

@@ -91,6 +91,20 @@ def test_empty_partitioned_stage_roundtrip(spark, tmp_path):
     assert resumed.count() == 0
     assert set(resumed.columns) == {"doc_id", "term", "bucket"}
 
+    # BM25F over a zero-row anchor field and zero-row field_norms has no
+    # average doc length: a descriptive ValueError (HTTP 400 on /search),
+    # never float(None)
+    idx = {"stats": {"n_buckets": 4},
+           "anchor_field": resumed.withColumn("anchor_tf", F.lit(1)),
+           "field_norms": spark.createDataFrame(
+               [], "doc_id string, doc_len long, anchor_len long"),
+           "tf": spark.createDataFrame(
+               [], "doc_id string, term string, tf long"),
+           "term_stats": spark.createDataFrame(
+               [], "term string, df long, idf double")}
+    with pytest.raises(ValueError, match="field_norms"):
+        bm25f.run_bm25f_batch(spark, [("q", "castle")], idx)
+
 
 @pytest.fixture(scope="module")
 def anchor_index(spark):
@@ -181,15 +195,14 @@ def test_bucket_tf_layout_is_result_identical(spark, tmp_path):
     and every answer must be bit-identical to the flat layout."""
     import os
 
-    from modern_search_engines_spark.operators import query as qmod
+    from modern_search_engines_spark.operators import wand
 
     pages = corpus.pages_df(spark, 120, seed=7)
     idxs = {}
     for tag, bucket_tf in (("flat", False), ("bucketed", True)):
         out = str(tmp_path / tag)
         build_persistent_index(spark, pages, out, verbose=False,
-                               anchor=True, bucket_tf=bucket_tf,
-                               materialize_bm25=True)
+                               anchor=True, bucket_tf=bucket_tf)
         idxs[tag] = load_index(spark, out)
     tf_dir = str(tmp_path / "bucketed" / "tf")
     assert any(d.startswith("bucket=") for d in os.listdir(tf_dir))
@@ -197,8 +210,9 @@ def test_bucket_tf_layout_is_result_identical(spark, tmp_path):
 
     queries = [("q1", "castle museum"), ("q2", "internal travel")]
     for name, run in (
-        ("bm25", lambda idx: qmod.run_batch(
-            spark, queries, idx, k=20, method="bm25")),
+        ("wand", lambda idx: wand.run_wand(
+            spark, queries, idx["postings_compressed"], idx["doc_dim"],
+            k=20, n_buckets=idx["stats"]["n_buckets"])),
         ("bm25f", lambda idx: bm25f.run_bm25f_batch(
             spark, queries, idx, k=20)),
     ):

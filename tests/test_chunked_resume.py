@@ -61,8 +61,7 @@ def test_chunk_resume_after_kill(spark, tmp_path, monkeypatch):
     for c in range(CHUNKS):
         assert sw.is_complete(f"extracted/chunk={c}")
 
-    for stage in ("tf", "term_stats", "bm25_postings",
-                  "postings_compressed", "docs"):
+    for stage in ("tf", "term_stats", "postings_compressed", "docs"):
         assert _rows(resumed[stage]) == _rows(clean[stage]), stage
     assert resumed["stats"] == clean["stats"]
 

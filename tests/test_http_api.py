@@ -4,6 +4,7 @@ real socket against a built index — request bodies, status codes, and
 error envelopes all match the Django handlers."""
 
 import json
+import logging
 import threading
 import urllib.error
 import urllib.request
@@ -131,7 +132,7 @@ def test_unknown_path_is_404(base_url):
     assert status == 404
 
 
-def test_wsgi_app_without_socket():
+def test_wsgi_app_without_socket(caplog):
     """The app is plain WSGI — usable under any server. Smoke it with a
     stub service and a hand-built environ (no Spark, no socket)."""
     import io
@@ -156,6 +157,20 @@ def test_wsgi_app_without_socket():
     got = json.loads(out.decode())
     assert got == [{"url_hash": "h", "score": 1.0, "q": "hi", "k": 3,
                     "div": None}]
+
+    # an unexpected service error is a 500 with the usual envelope, and
+    # its traceback reaches the module logger instead of vanishing
+    class Broken(Stub):
+        def search(self, *a, **k):
+            raise RuntimeError("index unreadable")
+
+    with caplog.at_level(logging.ERROR,
+                         logger="modern_search_engines_spark.plans.http_api"):
+        status, err = _wsgi_post(make_wsgi_app(Broken()), "/search",
+                                 {"query": "hi"})
+    assert (status, err) == (500, {"error": "index unreadable"})
+    assert any(r.exc_info and "index unreadable" in str(r.exc_info[1])
+               for r in caplog.records)
 
 
 def _wsgi_post(app, path, payload):
@@ -199,6 +214,12 @@ def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
                     {"query": "x", "diversity": 0.5}):
         status, err = _wsgi_post(app, "/search", payload)
         assert status == 400 and "error" in err, payload
+
+    # nothing matches (stop words only; terms absent from the index):
+    # an empty result list, not a 500
+    for query in ("the and of", "zzqqxx absent"):
+        assert _wsgi_post(app, "/search", {"query": query}) == (200, []), \
+            query
 
 
 def test_phrase_endpoint(base_url, spark, idx_dir):

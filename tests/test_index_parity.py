@@ -112,7 +112,7 @@ def test_bm25_partials_match(spark_index, oracle):
 
 def test_bm25_topk_rank_identical(spark, spark_index, oracle):
     res = query.run_batch(spark, QUERIES, spark_index, k=10,
-                          method="bm25", prune=False).collect()
+                          method="bm25").collect()
     got: dict[str, list] = {}
     for r in res:
         got.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))

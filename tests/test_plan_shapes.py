@@ -11,12 +11,10 @@ plans Catalyst actually produces, not just in docstrings:
 * near-dup joins never degrade to a cartesian product.
 """
 
-import os
-
 from pyspark.sql import functions as F
 
 from modern_search_engines_spark import corpus
-from modern_search_engines_spark.operators import indexing, query
+from modern_search_engines_spark.operators import indexing, query, wand
 from modern_search_engines_spark.plans.build import (
     build_persistent_index, load_index)
 
@@ -37,22 +35,23 @@ def test_query_path_pruned_and_broadcast(spark, tmp_path):
 
     queries = [("q1", "castle museum")]
     terms = query.query_terms_df(spark, queries)
+    n_buckets = idx["stats"]["n_buckets"]
     # the latency-critical scan is postings_compressed (the WAND path):
     # its bucket predicate must reach the file scan as PARTITION pruning
-    comp_pruned = query.prune_postings(idx["postings_compressed"], terms)
+    comp_pruned = query.prune_postings(idx["postings_compressed"], terms,
+                                       n_buckets)
     comp_plan = _plan(comp_pruned)
     assert ("PartitionFilters" in comp_plan
             and "bucket" in comp_plan), comp_plan
 
-    # the naive/correctness path over bm25_postings (flat layout) still
-    # filters on the bucket COLUMN (pushed predicate) and broadcasts the
-    # tiny terms side — the postings are never shuffled for the join
-    pruned = query.prune_postings(idx["bm25_postings"], terms)
-    scored = query.score_bm25(pruned, terms)
-    plan = _plan(scored)
-    assert "bucket" in plan, plan
+    # the WAND batch prunes the same scan and broadcasts the tiny terms
+    # side — the postings are never shuffled for the join
+    plan = _plan(wand.run_wand(spark, queries, idx["postings_compressed"],
+                               idx["doc_dim"], n_buckets=n_buckets))
+    assert "PartitionFilters: [" in plan, plan
+    assert "bucket" in plan.split("PartitionFilters: [", 1)[1] \
+        .split("]", 1)[0], plan
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
-    assert 0 < len(os.listdir(out + "/bm25_postings"))
 
 
 def test_tf_has_partial_aggregation(spark):

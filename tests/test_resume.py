@@ -27,11 +27,11 @@ def test_resume_after_simulated_kill(spark, tmp_path, monkeypatch):
     clean = build_persistent_index(spark, _pages(spark), clean_dir,
                                    verbose=False)
 
-    # simulated kill: die when the bm25_postings stage starts
+    # simulated kill: die when the postings_compressed stage starts
     orig = tbl.StageWriter.write_stage
 
     def bomb(self, df, name, **kw):
-        if name == "bm25_postings":
+        if name == "postings_compressed":
             raise RuntimeError("simulated kill")
         return orig(self, df, name, **kw)
 
@@ -45,7 +45,7 @@ def test_resume_after_simulated_kill(spark, tmp_path, monkeypatch):
     sw = tbl.StageWriter(spark, crash_dir, verbose=False)
     assert sw.is_complete("extracted")
     assert sw.is_complete("tf")
-    assert not sw.is_complete("bm25_postings")
+    assert not sw.is_complete("postings_compressed")
     pre_commit = sw.manifest("extracted")["commit_id"]
 
     # resume: completed stages must be skipped (same commit id), and the
@@ -55,8 +55,7 @@ def test_resume_after_simulated_kill(spark, tmp_path, monkeypatch):
     assert (tbl.StageWriter(spark, crash_dir, verbose=False)
             .manifest("extracted")["commit_id"] == pre_commit)
 
-    for stage in ("term_stats", "bm25_postings", "postings_compressed",
-                  "doc_dim", "docs"):
+    for stage in ("term_stats", "postings_compressed", "doc_dim", "docs"):
         assert _table_rows(resumed[stage]) == _table_rows(clean[stage]), stage
     assert resumed["stats"] == clean["stats"]
 
@@ -66,8 +65,8 @@ def test_stage_metrics_emitted(spark, tmp_path):
     res = build_persistent_index(spark, _pages(spark), out, verbose=False)
     metrics = res["writer"].metrics()
     names = {m["name"] for m in metrics}
-    assert {"extracted", "tf", "term_stats", "bm25_postings",
-            "postings_compressed", "docs"} <= names
+    assert {"extracted", "tf", "term_stats", "postings_compressed",
+            "docs"} <= names
     for m in metrics:
         assert m["rows"] >= 0 and m["bytes"] > 0 and m["seconds"] >= 0
         assert m["status"] == "complete"

@@ -122,33 +122,87 @@ def test_old_manifest_without_schema_rebuilds(spark, tmp_path):
     assert sw.manifest("s")["commit_id"] != first
 
 
-def test_n_buckets_change_rebuilds_postings(spark, tmp_path):
+def _run_queries_job():
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "run_queries.py")
+    spec = importlib.util.spec_from_file_location("jobs_run_queries", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_n_buckets_change_rebuilds_postings(spark, tmp_path, monkeypatch):
     """Resuming the same index dir with a different n_buckets must
     rebuild the bucket-keyed stages (their params record n_buckets) and
-    re-stamp corpus_stats.json — never serve a postings layout that
-    disagrees with the bucket count load_index will prune with."""
-    import json as _json
+    re-stamp corpus_stats.json — and every reader (the run_queries job,
+    the hot tier, SearchService) must prune with that recorded count,
+    answering exactly like a 64-bucket build of the same pages."""
+    import glob
 
-    from modern_search_engines_spark import corpus
+    import pyspark.sql
+
+    from modern_search_engines_spark import corpus, session
     from modern_search_engines_spark.plans.build import (
         build_persistent_index, load_index,
     )
+    from modern_search_engines_spark.plans.hot import HotSearcher
+    from modern_search_engines_spark.plans.serve import SearchService
 
     out = str(tmp_path / "idx")
     pages = corpus.pages_df(spark, 120, seed=3, num_partitions=4)
-    build_persistent_index(spark, pages, out, verbose=False,
-                           n_buckets=8, materialize_bm25=False)
+    build_persistent_index(spark, pages, out, verbose=False, n_buckets=8)
     buckets8 = {d for d in os.listdir(os.path.join(
         out, "postings_compressed")) if d.startswith("bucket=")}
     assert len(buckets8) > 4
 
-    build_persistent_index(spark, pages, out, verbose=False,
-                           n_buckets=4, materialize_bm25=False)
+    build_persistent_index(spark, pages, out, verbose=False, n_buckets=4)
     buckets4 = {d for d in os.listdir(os.path.join(
         out, "postings_compressed")) if d.startswith("bucket=")}
     assert buckets4 <= {f"bucket={i}" for i in range(4)}
     with open(os.path.join(out, "corpus_stats.json")) as f:
-        assert _json.load(f)["n_buckets"] == 4
-    # the rebuilt lazy bm25 plan prunes consistently with the new layout
-    idx = load_index(spark, out)
-    assert idx["bm25_postings"].agg(F.max("bucket")).collect()[0][0] <= 3
+        assert json.load(f)["n_buckets"] == 4
+    assert load_index(spark, out)["stats"]["n_buckets"] == 4
+
+    ref = str(tmp_path / "idx64")
+    build_persistent_index(spark, pages, ref, verbose=False, n_buckets=64)
+    queries = [("q1", "castle museum"), ("q2", "university lecture"),
+               ("q3", "food river hotel")]
+    qpath = tmp_path / "queries.tsv"
+    qpath.write_text("".join(f"{q}\t{t}\n" for q, t in queries))
+
+    # the job runs in this process on the shared session: keep its
+    # closing spark.stop() from ending the session for later tests
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
+    job = _run_queries_job()
+
+    def run_file(index_dir: str) -> list[tuple]:
+        run_dir = index_dir + "_run"
+        assert job.main(["--index", index_dir, "--queries", str(qpath),
+                         "--out", run_dir, "--k", "10",
+                         "--method", "wand"]) == 0
+        rows = []
+        for part in glob.glob(os.path.join(run_dir, "part-*.csv")):
+            with open(part) as f:
+                rows += [tuple(line.split("\t"))
+                         for line in f.read().splitlines()]
+        return sorted(rows)
+
+    def same(got, want):
+        assert [g[:-1] for g in got] == [w[:-1] for w in want]
+        assert [float(g[-1]) for g in got] == pytest.approx(
+            [float(w[-1]) for w in want], rel=1e-9)
+        assert want
+
+    same(run_file(out), run_file(ref))
+    hot, hot_ref = HotSearcher(out), HotSearcher(ref)
+    svc, svc_ref = SearchService(spark, out), SearchService(spark, ref)
+    for _, text in queries:
+        same(hot.search(text, top_k=10), hot_ref.search(text, top_k=10))
+        same([(d["url_hash"], d["score"])
+              for d in svc.search(text, top_k=10, spell_correct=False)],
+             [(d["url_hash"], d["score"])
+              for d in svc_ref.search(text, top_k=10,
+                                      spell_correct=False)])
