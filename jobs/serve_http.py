@@ -5,10 +5,12 @@ index — the reference's ``manage.py runserver`` analog
     spark-submit --py-files mse.zip jobs/serve_http.py \
         --index /data/index [--host 0.0.0.0] [--port 8000]
 
-The Spark session outlives requests exactly as the reference's Django
-worker keeps its unpickled index resident; each ``POST /search`` is a
-driver-coordinated top-k job, each ``POST /summarize`` a single-doc
-lookup + summarizer hook. Endpoint/error contract documented in
+The service outlives requests exactly as the reference's Django worker
+keeps its unpickled index resident. bm25 ``POST /search`` and
+``POST /summarize`` are answered driver-side by the hot tier (pyarrow
+reads of the query terms' bucket directories, no Spark job); tfidf,
+bm25f, ``POST /phrase`` and ``diversity`` run as driver-coordinated
+top-k Spark jobs on the session. Endpoint/error contract documented in
 ``modern_search_engines_spark/plans/http_api.py``. Bucket pruning uses
 the bucket count the index records in ``corpus_stats.json``.
 """

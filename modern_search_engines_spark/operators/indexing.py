@@ -229,29 +229,9 @@ def _partial_score_expr(avgdl: float):
     return F.col("recency") * weight * sat
 
 
-def _doc_dim_join(tf: DataFrame, doc_len: DataFrame,
-                  doc_fields: DataFrame,
-                  broadcast_doc_dims: bool) -> DataFrame:
-    """tf ⋈ doc_len ⋈ doc_fields, the doc-dim attachment both scoring
-    builds share. Default (False) is the doc_id-keyed co-partitioned
-    shuffle join — the only shape that exists at 10^12 docs, where the
-    per-doc dims are corpus-sized, and the shape whose N→4N scaling is
-    clean (a broadcast's HashedRelation build is driver-SERIAL: on this
-    box it measurably caps the 1→4 ratio even while lowering both
-    absolute times). ``broadcast_doc_dims=True`` hints both dim sides
-    broadcast for small interactive corpora — it removes two sorts +
-    an exchange of the posting-sized fact table and is worth ~20%
-    wall-clock below ~10^5 docs."""
-    if broadcast_doc_dims:
-        doc_len = F.broadcast(doc_len)
-        doc_fields = F.broadcast(doc_fields)
-    return tf.join(doc_len, "doc_id").join(doc_fields, "doc_id")
-
-
 def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
                         doc_fields: DataFrame, avgdl: float,
-                        n_buckets: int = 64,
-                        broadcast_doc_dims: bool = False) -> DataFrame:
+                        n_buckets: int = 64) -> DataFrame:
     """(term, bucket, doc_id, score) with score = the idf-less partial.
 
     This is the fact-table side of the deferred-idf split: idf is a
@@ -263,11 +243,16 @@ def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
     difference between shuffling the whole index and shuffling a dim
     table (measured 1.9× on the fused stage at bench scale).
 
-    Join shape: see ``_doc_dim_join``. ``bucket`` =
+    The doc dims (doc_len, doc_fields) attach by a doc_id-keyed
+    co-partitioned shuffle join, not a broadcast: it is the only shape
+    that exists at 10^12 docs, where the per-doc dims are corpus-sized,
+    and its N→4N scaling is clean (a broadcast's HashedRelation build is
+    driver-SERIAL: it measurably caps the 1→4 core ratio even while
+    lowering both absolute times). ``bucket`` =
     pmod(xxhash64(term), n_buckets) is the postings partition key →
     query-time partition pruning (SURVEY.md §4)."""
     return (
-        _doc_dim_join(tf, doc_len, doc_fields, broadcast_doc_dims)
+        tf.join(doc_len, "doc_id").join(doc_fields, "doc_id")
         .select(
             "term",
             F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("bucket"),
@@ -279,16 +264,14 @@ def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
 
 def build_bm25_postings(tf: DataFrame, term_stats: DataFrame,
                         doc_len: DataFrame, doc_fields: DataFrame,
-                        avgdl: float, n_buckets: int = 64,
-                        broadcast_doc_dims: bool = False) -> DataFrame:
+                        avgdl: float, n_buckets: int = 64) -> DataFrame:
     """(term, bucket, doc_id, score) — the flat BM25 scores
     (BM25Ranker.py:18-26) of ``build_index``, the naive reference the
     tests hold the compressed index to: the idf-less partial
     (``build_bm25_partials``) × idf, the same double product the
     compressed stage stores."""
     return (
-        build_bm25_partials(tf, doc_len, doc_fields, avgdl, n_buckets,
-                            broadcast_doc_dims)
+        build_bm25_partials(tf, doc_len, doc_fields, avgdl, n_buckets)
         .join(term_stats.select("term", "idf"), "term")
         .select("term", "bucket", "doc_id",
                 (F.col("score") * F.col("idf")).alias("score"))

@@ -18,7 +18,7 @@ see ``search``). Hot results are rank- and score-identical to the
 distributed WAND path (tested).
 
 Memory bounds: nothing whole-index lives in RAM. Read blobs are cached
-per (bucket) on an LRU-ish dict capped by ``max_cached_buckets``; the
+per (bucket) on an LRU-ish dict capped by ``MAX_CACHED_BUCKETS``; the
 doc_idx→doc_id display lookup resolves each query's ≤ k result ids with
 a row-group-pruned read of the docs parquet (``_doc_ids_of``): the
 build sorts the docs stage by doc_id, so parquet column statistics give
@@ -44,17 +44,16 @@ from .build import read_stats
 
 _BLOB_COLS = ["term", "shard", "n", "ids_blob", "scores_blob",
               "block_first", "block_max", "block_off"]
+MAX_CACHED_BUCKETS = 64  # one bucket's decoded rows per entry
+MAX_CACHED_DOC_IDS = 65536  # resolved doc_idx -> doc_id pairs
 
 
 class HotSearcher:
     """Answer single BM25 queries from a built index dir without Spark."""
 
-    def __init__(self, index_dir: str, max_cached_buckets: int = 64,
-                 max_cached_doc_ids: int = 65536):
+    def __init__(self, index_dir: str):
         self.index_dir = index_dir
         self.n_buckets = read_stats(index_dir)["n_buckets"]
-        self.max_cached_buckets = max_cached_buckets
-        self.max_cached_doc_ids = max_cached_doc_ids
         self._buckets: dict[int, dict[str, list[dict]]] = {}
         self._doc_id_cache: dict[int, str] = {}
         self._docs_files: list[pq.ParquetFile] | None = None
@@ -83,7 +82,7 @@ class HotSearcher:
             for i in range(table.num_rows):
                 row = {c: cols[c][i] for c in _BLOB_COLS}
                 out.setdefault(row["term"], []).append(row)
-        if len(self._buckets) >= self.max_cached_buckets:
+        if len(self._buckets) >= MAX_CACHED_BUCKETS:
             self._buckets.pop(next(iter(self._buckets)))
         self._buckets[bucket] = out
         return out
@@ -133,7 +132,7 @@ class HotSearcher:
                 for d in ids.filter(mask).to_pylist():
                     if d[:15] in pref_set:
                         self._doc_id_cache[int(d[:15], 16)] = d
-        if len(self._doc_id_cache) > self.max_cached_doc_ids:
+        if len(self._doc_id_cache) > MAX_CACHED_DOC_IDS:
             keep = set(doc_idxs)
             self._doc_id_cache = {
                 i: d for i, d in self._doc_id_cache.items() if i in keep}
@@ -191,10 +190,11 @@ class HotSearcher:
 
 
 class HotSearchService:
-    """``SearchService``-shaped adapter over ``HotSearcher`` so
-    ``plans.http_api.make_wsgi_app`` can serve ``POST /search`` /
-    ``POST /summarize`` at interactive latency — no Spark job (or
-    session) per request; Spark only builds/maintains the index.
+    """The driver-side serving surface ``plans.http_api.make_wsgi_app``
+    serves: ``POST /search`` / ``POST /summarize`` at interactive
+    latency, with no Spark job (or session) per request; Spark only
+    builds and maintains the index. ``plans.serve.SearchService``
+    extends it with the Spark-only methods.
 
     Retrieval is the hot tier's bm25 union-sum (rank-identical to the
     distributed WAND path); ``retrieval_method="tfidf"`` raises
@@ -203,7 +203,7 @@ class HotSearchService:
     stats-pruned pyarrow-dataset read of the docs stage (bounded at any
     corpus size, like ``_doc_ids_of``); ``diversity`` is accepted for
     endpoint-shape compatibility and raises loudly (MMR reranking needs
-    the LDA topic table — serve that combination from the Spark-backed
+    the LDA topic table — serve that combination from
     ``SearchService``)."""
 
     DISPLAY_COLS = ("url", "title", "description", "icon_url")
@@ -220,6 +220,20 @@ class HotSearchService:
                             filter=ds.field("doc_id").isin(doc_ids))
         return {r["doc_id"]: r for r in tbl.to_pylist()}
 
+    def _results(self, ranked: list[tuple[str, float]]) -> list[dict]:
+        """[(doc_id, score)] in rank order → reference-shaped dicts
+        (DocumentIndex.__get_documents minus raw_text, which views.py
+        deletes before responding anyway)."""
+        if not ranked:  # an empty isin() filter is an Arrow type error
+            return []
+        rows = self._display_rows([d for d, _ in ranked])
+        return [{
+            "url": rows[d]["url"], "url_hash": d,
+            "title": rows[d]["title"],
+            "description": rows[d]["description"],
+            "icon_url": rows[d]["icon_url"], "score": score,
+        } for d, score in ranked if d in rows]
+
     def search(self, query: str, top_k: int = 20,
                retrieval_method: str = "bm25",
                diversity: float | None = None) -> list[dict]:
@@ -231,18 +245,12 @@ class HotSearchService:
             raise ValueError(
                 "diversity reranking needs the Spark-backed "
                 "SearchService (LDA topic table)")
-        ranked = self.searcher.search(query, top_k=top_k)
-        if not ranked:  # an empty isin() filter is an Arrow type error
-            return []
-        rows = self._display_rows([d for d, _ in ranked])
-        return [{
-            "url": rows[d]["url"], "url_hash": d,
-            "title": rows[d]["title"],
-            "description": rows[d]["description"],
-            "icon_url": rows[d]["icon_url"], "score": score,
-        } for d, score in ranked if d in rows]
+        return self._results(self.searcher.search(query, top_k=top_k))
 
     def summarize(self, url_hash: str) -> str | None:
+        """views.py:64-95: the document's text by url_hash through the
+        (pluggable) summarizer; None when the doc is absent (the
+        endpoint's 404)."""
         import pyarrow.dataset as ds
 
         from ..operators import mlhooks

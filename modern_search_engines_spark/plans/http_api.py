@@ -13,30 +13,35 @@ leaves the server (views.py:52-53 deletes it before responding).
 PRESENCE like the reference (``'diversity' in data``). Unsupported
 method → 400 ``{"error": "Retrieval method not supported"}``; bad JSON
 body → 400 ``{"error": "Invalid JSON"}``; any other verb → 405
-``{"error": "Invalid request method"}`` (views.py:59-61).
+``{"error": "Invalid request method"}`` (views.py:59-61). A body that is
+not a JSON object, a non-string ``query``, a ``top_k`` that is not an
+integer ≥ 1 or a ``diversity`` that is not a number → 400 before any
+work.
 
 ``POST /summarize``  body ``{"url_hash"}`` → ``{"summary": ...}``;
-empty or unknown url_hash → 404 ``{"error": "Document not found"}``
-(views.py:66-88); bad JSON → 400; other verbs → 405.
+empty, non-string or unknown url_hash → 404 ``{"error": "Document not
+found"}`` (views.py:66-88); bad JSON → 400; other verbs → 405.
 
 ``POST /phrase``  body ``{"phrase", "top_k"=20}`` → same result-dict
 array, scored by phrase occurrence count — an EXTENSION endpoint (no
 reference counterpart; its index is position-free). 400 when the
-service doesn't support it or the index lacks the positional layer.
+service doesn't support it or the index lacks the positional layer, and
+on the same ``phrase``/``top_k`` checks as /search.
 
 ``retrieval_method: "bm25f"`` on /search is likewise an EXTENSION
 value (body + in-link anchor-text fields): 400 when the index was
 built without ``anchor=True`` or the service can't run it.
 
-The Spark session lives in the long-running server process exactly as
-the reference keeps its unpickled index in the Django worker: queries
-are driver-coordinated jobs, only top-k rows are collected. For
-interactive-latency serving without a Spark job per request, point the
-same app at ``plans.hot.HotSearchService`` — the app only needs
-``search()`` and ``summarize()``. A service raising ValueError (bad
-request parameters, e.g. the hot tier refusing tfidf) maps to 400;
-other exceptions map to 500 like Django's unhandled-exception path, and
-their tracebacks go to this module's logger.
+The service lives in the long-running server process exactly as the
+reference keeps its unpickled index in the Django worker.
+``SearchService`` answers bm25 and /summarize driver-side through the
+hot tier and runs Spark jobs only for tfidf, bm25f, phrase and
+diversity; ``plans.hot.HotSearchService`` serves the same app without a
+Spark session at all — the app only needs ``search()`` and
+``summarize()``. A service raising ValueError (bad request parameters,
+e.g. the hot tier refusing tfidf) maps to 400; other exceptions map to
+500 like Django's unhandled-exception path, and their tracebacks go to
+this module's logger.
 """
 
 from __future__ import annotations
@@ -65,8 +70,21 @@ def _read_json(environ) -> dict:
         n = int(environ.get("CONTENT_LENGTH") or 0)
     except ValueError:
         n = 0
-    raw = environ["wsgi.input"].read(n) if n else b""
+    # read(-1) would block on a socket until the client closes it
+    raw = environ["wsgi.input"].read(n) if n > 0 else b""
     return json.loads(raw.decode("utf-8"))
+
+
+def _text_and_top_k(data: dict, key: str) -> tuple[str, int]:
+    """The ``key`` text and ``top_k`` of a /search or /phrase body;
+    ValueError (→ 400) unless they are a string and an integer ≥ 1 (a
+    negative top_k would slice ranks from the end)."""
+    text, top_k = data.get(key, ""), data.get("top_k", 20)
+    if not isinstance(text, str):
+        raise ValueError(f"{key} must be a string")
+    if isinstance(top_k, bool) or not isinstance(top_k, int) or top_k < 1:
+        raise ValueError("top_k must be an integer >= 1")
+    return text, top_k
 
 
 def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
@@ -75,23 +93,26 @@ def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
     ``summarize(url_hash)``)."""
 
     def handle_search(data: dict) -> tuple[int, object]:
-        query = data.get("query", "")
-        top_k = int(data.get("top_k", 20))
+        query, top_k = _text_and_top_k(data, "query")
         method = str(data.get("retrieval_method", "bm25")).lower()
         # bm25|tfidf = the reference's set (views.py:41-48); bm25f is an
         # EXTENSION value — a service without the anchor field (or the
         # hot tier) raises ValueError, which the app maps to 400
         if method not in ("bm25", "tfidf", "bm25f"):
             return 400, {"error": "Retrieval method not supported"}
-        diversity = (float(data.get("diversity", 0))
-                     if "diversity" in data else None)
+        diversity = None
+        if "diversity" in data:  # presence-keyed, like views.py:55
+            try:
+                diversity = float(data["diversity"])
+            except TypeError:  # null, list, object
+                raise ValueError("diversity must be a number") from None
         docs = service.search(query, top_k=top_k, retrieval_method=method,
                               diversity=diversity)
         return 200, docs
 
     def handle_summarize(data: dict) -> tuple[int, object]:
         url_hash = data.get("url_hash", "")
-        if not url_hash:
+        if not url_hash or not isinstance(url_hash, str):  # no such key
             return 404, {"error": "Document not found"}
         summary = service.summarize(url_hash)
         if summary is None:
@@ -105,8 +126,7 @@ def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
         fn = getattr(service, "phrase_search", None)
         if fn is None:  # e.g. the hot tier — positional scans need Spark
             return 400, {"error": "Phrase search not supported"}
-        phrase = data.get("phrase", "")
-        top_k = int(data.get("top_k", 20))
+        phrase, top_k = _text_and_top_k(data, "phrase")
         return 200, fn(phrase, top_k=top_k)
 
     routes = {"/search": handle_search, "/summarize": handle_summarize,
@@ -126,6 +146,9 @@ def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
         except (json.JSONDecodeError, UnicodeDecodeError):
             return _json_response(start_response, 400,
                                   {"error": "Invalid JSON"})
+        if not isinstance(data, dict):
+            return _json_response(start_response, 400,
+                                  {"error": "JSON body must be an object"})
         try:
             status, payload = handler(data)
         except ValueError as exc:

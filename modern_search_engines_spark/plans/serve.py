@@ -5,40 +5,41 @@ re-expressed over a built index directory.
 The reference unpickles its in-memory index once at server start and
 answers each POST with ``retrieve_bm25``/``retrieve_tfidf`` → top-k →
 document-display dicts → optional MMR diversification
-(DocumentIndex.py:219-230, views.py:51-57). Here the "loaded index" is
-the staged table set (``plans.build.load_index``): a search is
-tokenize_query → bucket-pruned WAND over the compressed postings (bm25)
-or a broadcast-join tf-idf scoring (tfidf) → top-k → a broadcast join
-onto the docs display table → result dicts in the reference's JSON
+(DocumentIndex.py:219-230, views.py:51-57). ``SearchService`` is the
+one front door: it IS the hot tier (``plans.hot.HotSearchService``), so
+bm25 ranking (``HotSearcher.search``, rank- and score-identical to
+WAND), the display rows and ``summarize`` run driver-side with pyarrow
+and no Spark job. Spark serves only what the hot artifact cannot
+answer: tfidf, bm25f, phrase search, MMR diversity, the
+spell-correction vocabulary and batch summaries. Each Spark method
+collects just its ≤ top_k ranked (doc_id, score) rows and shares the
+hot tier's display path, so every method returns the reference's JSON
 shape (url, url_hash, title, description, icon_url, score [, topics]).
 
-Only the ≤ top_k result rows ever reach the driver. The LDA reranker is
-trained lazily on first diversified search (the reference loads its
-pre-trained gensim model at server start, ReRanker.py:15-23) and topic
-shares are fetched per ranking via ``rerank.topics_for_docs`` — the
-full topic table stays distributed.
+The LDA reranker is trained lazily on first diversified search (the
+reference loads its pre-trained gensim model at server start,
+ReRanker.py:15-23) and topic shares are fetched per ranking via
+``rerank.topics_for_docs`` — the full topic table stays distributed.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators import indexing, mlhooks, query as qmod, rerank, wand
+from ..operators import indexing, mlhooks, query as qmod, rerank
 from .build import load_index
+from .hot import HotSearchService
 
-DISPLAY_COLS = ("url", "title", "description", "icon_url")
 
-
-class SearchService:
+class SearchService(HotSearchService):
     """One loaded index directory; ``search()`` per query."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        super().__init__(index_dir)
         self.spark = spark
-        self.index_dir = index_dir
         self.idx = load_index(spark, index_dir)
-        self.docs = self.idx["docs"].select("doc_id", *DISPLAY_COLS)
         self._tfidf = None
         self._reranker = None
         self._vocab: dict[str, int] | None = None
@@ -73,25 +74,13 @@ class SearchService:
 
     # -- retrieval ----------------------------------------------------------
 
-    def _results(self, ranked) -> list[dict]:
-        """ranked(doc_id, score[, rank]) → reference-shaped dicts
-        (DocumentIndex.__get_documents minus raw_text, which views.py
-        deletes before responding anyway)."""
-        rows = (self.docs.join(F.broadcast(ranked), "doc_id")
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .collect())
-        return [{
-            "url": r["url"], "url_hash": r["doc_id"], "title": r["title"],
-            "description": r["description"], "icon_url": r["icon_url"],
-            "score": float(r["score"]),
-        } for r in rows]
-
-    def _search_bm25(self, q: str, top_k: int) -> list[dict]:
-        ranked = wand.run_wand(
-            self.spark, [("q", q)], self.idx["postings_compressed"],
-            self.idx["doc_dim"], k=top_k,
-            n_buckets=self.idx["stats"]["n_buckets"])
-        return self._results(ranked.select("doc_id", "score"))
+    @staticmethod
+    def _collect(ranked: DataFrame) -> list[tuple[str, float]]:
+        """A Spark top-k frame (doc_id, score, …) of ≤ top_k rows →
+        [(doc_id, score)] in the canonical (score desc, doc_id asc)
+        order, ready for the shared display path."""
+        rows = ranked.orderBy(F.desc("score"), F.asc("doc_id")).collect()
+        return [(r["doc_id"], float(r["score"])) for r in rows]
 
     def _search_tfidf(self, q: str, top_k: int) -> list[dict]:
         if self._tfidf is None:
@@ -101,7 +90,7 @@ class SearchService:
         scored = qmod.score_tfidf(self._tfidf, self.idx["term_stats"],
                                   terms)
         top = qmod.topk(scored, top_k)
-        return self._results(top.select("doc_id", "score"))
+        return self._results(self._collect(top))
 
     def _search_bm25f(self, q: str, top_k: int) -> list[dict]:
         """BM25F over the anchor field — an engine EXTENSION (the
@@ -117,7 +106,7 @@ class SearchService:
         from ..operators import bm25f
         ranked = bm25f.run_bm25f_batch(self.spark, [("q", q)], self.idx,
                                        k=top_k)
-        return self._results(ranked.select("doc_id", "score"))
+        return self._results(self._collect(ranked))
 
     def phrase_search(self, phrase: str, top_k: int = 20) -> list[dict]:
         """Exact-phrase retrieval over the positional layer — an engine
@@ -139,9 +128,8 @@ class SearchService:
             return []
         ranked = phrase_ops.phrase_topk(
             ptok, toks, k=top_k, n_buckets=self.idx["stats"]["n_buckets"])
-        return self._results(
-            ranked.select("doc_id",
-                          F.col("ptf").cast("double").alias("score")))
+        return self._results(self._collect(
+            ranked.withColumnRenamed("ptf", "score")))
 
     def search(self, query: str, top_k: int = 20,
                retrieval_method: str = "bm25",
@@ -159,7 +147,7 @@ class SearchService:
             query = self.correct_query(query)
         method = retrieval_method.lower()
         if method == "bm25":
-            docs = self._search_bm25(query, top_k)
+            docs = self._results(self.searcher.search(query, top_k))
         elif method == "tfidf":
             docs = self._search_tfidf(query, top_k)
         elif method == "bm25f":
@@ -220,15 +208,3 @@ class SearchService:
             if d["url_hash"] in got:
                 d["summary"] = got[d["url_hash"]]
         return docs
-
-    def summarize(self, url_hash: str) -> str | None:
-        """views.py:64-95: fetch the document's text by url_hash and run
-        the (pluggable) summarizer. Returns None when the doc is absent
-        (the endpoint's 404)."""
-        row = (self.spark.read.parquet(
-            os.path.join(self.index_dir, "extracted"))
-            .where(F.col("doc_id") == url_hash)
-            .select("text").limit(1).collect())
-        if not row:
-            return None
-        return mlhooks._summarizer(row[0]["text"] or "")

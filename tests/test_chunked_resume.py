@@ -69,6 +69,15 @@ def test_chunk_resume_after_kill(spark, tmp_path, monkeypatch):
     assert (_rows(resumed["extracted"].select("url", "doc_id"))
             == _rows(clean["extracted"].select("url", "doc_id")))
 
+    # the serving tier's pyarrow summarize reads the chunk=<c>/ layout
+    from pyspark.sql import functions as F
+
+    from modern_search_engines_spark.plans.hot import HotSearchService
+    doc_id = (resumed["extracted"].where(F.length("text") > 300)
+              .orderBy("doc_id").first()["doc_id"])
+    summary = HotSearchService(crash_dir).summarize(doc_id)
+    assert isinstance(summary, str) and summary
+
 
 def test_chunked_noop_resume_preserves_stage_manifest(spark, tmp_path):
     out = str(tmp_path / "idx")

@@ -12,7 +12,9 @@ import urllib.request
 import pytest
 
 from modern_search_engines_spark import corpus
-from modern_search_engines_spark.plans.build import build_persistent_index
+from modern_search_engines_spark.plans.build import (
+    build_persistent_index, load_index,
+)
 from modern_search_engines_spark.plans.http_api import make_wsgi_app, serve
 from modern_search_engines_spark.plans.serve import SearchService
 
@@ -50,7 +52,7 @@ def _post(url: str, payload, raw: bytes | None = None):
         return e.code, json.loads(e.read().decode())
 
 
-def test_search_bm25_response_shape(base_url):
+def test_search_bm25_response_shape(base_url, spark, idx_dir):
     status, docs = _post(f"{base_url}/search",
                          {"query": "castle museum", "top_k": 5})
     assert status == 200 and isinstance(docs, list) and 0 < len(docs) <= 5
@@ -59,6 +61,18 @@ def test_search_bm25_response_shape(base_url):
                             "icon_url", "score"}
     scores = [d["score"] for d in docs]
     assert scores == sorted(scores, reverse=True)
+
+    # the endpoint's hot-tier ranking is the distributed WAND top-k
+    from modern_search_engines_spark.operators import wand
+    idx = load_index(spark, idx_dir)
+    ranked = wand.run_wand(spark, [("q", "castle museum")],
+                           idx["postings_compressed"], idx["doc_dim"], k=5,
+                           n_buckets=idx["stats"]["n_buckets"])
+    want = [(r["doc_id"], r["score"]) for r in
+            ranked.orderBy("rank").collect()]
+    assert [d["url_hash"] for d in docs] == [d for d, _ in want]
+    for d, (_, score) in zip(docs, want):
+        assert d["score"] == pytest.approx(score, rel=1e-9)
 
 
 def test_search_tfidf_and_service_parity(base_url, spark):
@@ -185,10 +199,12 @@ def _wsgi_post(app, path, payload):
 
 
 def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
-    """HotSearchService behind the SAME WSGI app: /search answers are
-    url_hash/score-identical to the Spark-backed endpoint (the hot tier
-    is rank-identical to WAND by construction), /summarize round-trips,
-    and tfidf/diversity are clean 400s, not 500s."""
+    """HotSearchService (no Spark session) behind the SAME WSGI app:
+    /search answers are url_hash/score-identical to the SearchService
+    endpoint (both rank bm25 with the hot tier, which
+    test_search_bm25_response_shape holds to WAND), /summarize
+    round-trips, and tfidf/diversity and malformed bodies are clean
+    400s, not 500s or unbounded work."""
     from modern_search_engines_spark.plans.hot import HotSearchService
     app = make_wsgi_app(HotSearchService(idx_dir))
 
@@ -214,6 +230,38 @@ def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
                     {"query": "x", "diversity": 0.5}):
         status, err = _wsgi_post(app, "/search", payload)
         assert status == 400 and "error" in err, payload
+
+    # malformed bodies: a null/negative/boolean top_k (a negative one
+    # would slice ranks from the end), a non-string query, a
+    # non-numeric diversity, a JSON array instead of an object
+    for payload in ({"query": "castle", "top_k": None},
+                    {"query": "castle", "top_k": -2},
+                    {"query": "castle", "top_k": 0},
+                    {"query": "castle", "top_k": True},
+                    {"query": "castle", "top_k": "5"},
+                    {"query": 123},
+                    {"query": "castle", "diversity": None},
+                    ["castle"]):
+        status, err = _wsgi_post(app, "/search", payload)
+        assert status == 400 and "error" in err, payload
+    for url_hash in (123, ["h"]):  # a non-string key names no document
+        assert _wsgi_post(app, "/summarize", {"url_hash": url_hash}) == \
+            (404, {"error": "Document not found"})
+
+    # a negative Content-Length reads no body instead of read(-1), which
+    # blocks on a socket until the client hangs up
+    class NoUnboundedRead:
+        def read(self, n=-1):
+            assert n >= 0, "unbounded read"
+            return b""
+
+    captured = {}
+    out = b"".join(app({"PATH_INFO": "/search", "REQUEST_METHOD": "POST",
+                        "CONTENT_LENGTH": "-1",
+                        "wsgi.input": NoUnboundedRead()},
+                       lambda st, h: captured.update(status=st)))
+    assert captured["status"].startswith("400")
+    assert json.loads(out.decode()) == {"error": "Invalid JSON"}
 
     # nothing matches (stop words only; terms absent from the index):
     # an empty result list, not a 500
@@ -272,6 +320,13 @@ def test_phrase_endpoint(base_url, spark, idx_dir):
     app = make_wsgi_app(svc2)
     status, err = _wsgi_post(app, "/phrase", {"phrase": phrase})
     assert status == 400 and "error" in err
+
+    # malformed /phrase bodies -> 400 before any Spark work
+    for payload in ({"phrase": phrase, "top_k": -1},
+                    {"phrase": phrase, "top_k": None},
+                    {"phrase": 7}, [phrase]):
+        status, err = _wsgi_post(make_wsgi_app(svc), "/phrase", payload)
+        assert status == 400 and "error" in err, payload
 
     # service without a phrase_search method (hot tier) -> clean 400
     class NoPhrase:

@@ -1,5 +1,6 @@
 """Serving path (plans/serve.py — the /search + /summarize analog):
-result shape and ranks match the single-node oracle's retrieve()."""
+result shape and ranks match the single-node oracle's retrieve(), and
+bm25 + summarize are answered by the hot tier without a Spark job."""
 
 import pytest
 
@@ -100,3 +101,19 @@ def test_summarize_known_and_unknown(service, oracle):
     s = service.summarize(some_id)
     assert isinstance(s, str) and s
     assert service.summarize("0" * 32) is None
+
+
+def test_bm25_and_summarize_run_no_spark_job(spark, service):
+    """The one front door answers bm25 and /summarize from the hot tier:
+    no Spark job runs for either (tfidf/bm25f/phrase/diversity still do)."""
+    sc = spark.sparkContext
+    group = "serve-front-door"
+    sc.setJobGroup(group, "bm25 search + summarize")
+    try:
+        docs = service.search("castle museum", top_k=5,
+                              spell_correct=False)
+        summary = service.summarize(docs[0]["url_hash"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert docs and isinstance(summary, str) and summary
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
