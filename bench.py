@@ -5,17 +5,16 @@ Measures, per BASELINE.md protocol:
      synthetic page corpus at TWO parallelism levels — N and 4N cores
      on identical input (the sandbox proxy for N vs 4N executors; north
      rule scaling-efficiency evidence). Headline pair: local[1] ->
-     local[4], below this sandbox's contention knee (real-cluster
-     executors live on separate machines — they don't share one box's
-     memory bus); secondary: 2->8 and 4->16 document the knee, whose
-     falling raw ratios track the sandbox's own falling multiprocessing
-     ceiling (measured and reported alongside). Corpus warmed untimed,
+     local[4]; pairs above the box's core count would measure
+     oversubscription, not the engine. Corpus warmed untimed,
      strictly alternating run order + min-of-6 per headline level, the
      six pairs spread across the whole run (this box has multi-minute
      slow phases and gVisor cold-I/O spikes);
   2. per-query BM25 latency (block-max WAND over compressed postings,
      bucket-pruned scan) → p50/p95 over the reference-style query set;
   3. the driver-contract queries at $SPARK_GRAFT_SF_DIR.
+
+Sections 2 and 3 run at local[$SPARK_GRAFT_CPUS].
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -164,8 +163,12 @@ def main() -> None:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = 0.1
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES")
-                  or max(400, int(sf * 800_000)))
+    # full-size corpus: the fixed per-build seconds (stage-job floors +
+    # commits, ~4s warm) must be <5% of the local[4] wall or they cap
+    # the ratio (Amdahl) — measured 0.76 at n_pages/2 vs the same
+    # code's 0.83 model at n_pages
+    n_pages = max(400, int(os.environ.get("SPARK_GRAFT_BENCH_PAGES")
+                           or sf * 800_000))
     # every bench session shares one local-mode JVM whose heap grows
     # toward spark.driver.memory across builds; past physical RAM the
     # OOM killer ends the JVM mid-run, so default to half the box
@@ -178,16 +181,13 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="mse_bench_")
     try:
         # -- 1. scaling: identical input at N and 4N cores ---------------
-        # HEADLINE pair: local[1] -> local[4], BELOW this sandbox's
-        # contention knee. On a real cluster, 4N executors live on
-        # separate machines — they do not share one box's memory bus and
-        # gVisor syscall path the way threads 9..32 here do. Measured
-        # per-core throughput on this box degrades smoothly as thread
-        # count grows even for pure-python multiprocessing (the
-        # machine_parallel_ceiling calibration), so the sub-knee pair is
-        # the one that isolates the ENGINE's scaling from the sandbox's.
-        # The knee itself is documented by the secondary pairs below
-        # (2->8, 4->16), whose raw ratios track the falling mp ceiling.
+        # HEADLINE pair: local[1] -> local[4]. On a real cluster, 4N
+        # executors live on separate machines — they do not share one
+        # box's memory bus the way local threads do. Measured per-core
+        # throughput on a shared box degrades as thread count grows even
+        # for pure-python multiprocessing (the machine_parallel_ceiling
+        # calibration), and a pair above the box's core count measures
+        # oversubscription, so 1->4 is the one pair reported.
         #
         # Protocol: corpus warmed untimed (first read of a fresh parquet
         # dir pays a ~2x cold-I/O penalty on gVisor — measured 99s vs
@@ -198,29 +198,16 @@ def main() -> None:
         # both runs of one level. Fresh build dir per run (a reused dir
         # would resume, not rebuild).
         lo, hi = 1, 4
-        # full-size corpus: the fixed per-build seconds (stage-job
-        # floors + commits, ~4s warm) must be <5% of the local[4] wall
-        # or they cap the ratio (Amdahl) — measured 0.76 at n_pages/2 vs
-        # the same code's 0.83 model at n_pages
-        n_head = max(400, n_pages)
         pages_path = os.path.join(work, "pages")
         materialize_pages(n_pages, pages_path, cpus)
-        if n_head == n_pages:
-            head_path = pages_path  # one corpus serves both sections
-        else:
-            head_path = os.path.join(work, "pages_head")
-            materialize_pages(n_head, head_path, cpus)
         warm = get_spark("bench-warm", master=f"local[{cpus}]")
-        try:  # pull the corpora through the page cache, untimed. JVM-only
+        try:  # pull the corpus through the page cache, untimed. JVM-only
             # noop sink (reads every column/page, runs no Python workers):
             # a python action (foreach) here left a benign-but-noisy
             # DAGScheduler "Broken pipe" accumulator race against the
             # spark.stop() below — the r02 bench-tail stack trace
-            warm.read.parquet(head_path).write.format("noop") \
+            warm.read.parquet(pages_path).write.format("noop") \
                 .mode("overwrite").save()
-            if head_path != pages_path:
-                warm.read.parquet(pages_path).write.format("noop") \
-                    .mode("overwrite").save()
         finally:
             warm.stop()
 
@@ -246,55 +233,23 @@ def main() -> None:
         # samples are emitted in the JSON so the floor is auditable.
         samples: dict[str, list[float]] = {"lo": [], "hi": []}
 
-        def head_pair(tag: str) -> None:
-            samples["lo"].append(run1(lo, head_path, f"h_lo_{tag}"))
-            samples["hi"].append(run1(hi, head_path, f"h_hi_{tag}"))
-            for t in (f"h_lo_{tag}", f"h_hi_{tag}"):
-                shutil.rmtree(os.path.join(work, f"idx{t}"),
+        def head_pair(tag: str, keep_hi: bool = False) -> None:
+            samples["lo"].append(run1(lo, pages_path, f"h_lo_{tag}"))
+            samples["hi"].append(run1(hi, pages_path, f"h_hi_{tag}"))
+            for t in ("lo",) if keep_hi else ("lo", "hi"):
+                shutil.rmtree(os.path.join(work, f"idxh_{t}_{tag}"),
                               ignore_errors=True)
 
-        head_pair("a")
+        # the first local[4] index is kept: the query section reads it
+        head_pair("a", keep_hi=True)
+        query_index = os.path.join(work, "idxh_hi_a")
         head_pair("b")
 
-        # secondary datapoints on the 1x corpus: the contention knee.
-        # 2->8 (16 runnable threads at the high end) and 4->16 (~32 —
-        # machine exactly subscribed). One run per level; their falling
-        # raw ratios track the falling mp ceiling — the sandbox, not the
-        # dataflow. The local[16] index is reused by the query section.
-        # The local[4] side of the 4->16 ratio reuses the headline hi
-        # floor (same corpus, same job) instead of burning another
-        # standalone build — computed after the last spread pair below.
-        # t16 is min-of-2 with the second sample taken at the END of the
-        # run (run-6 lesson: one draw vs the headline's six biased the
-        # 4->16 ratio to 0.276 when the single local[16] sample caught a
-        # degraded phase the same run's other sections didn't show;
-        # min-of-2 spread is deterministic — never triggered by the
-        # ratio's value — and symmetric enough for a knee footnote).
-        t2 = run1(2, pages_path, "s2")
-        t8 = run1(8, pages_path, "s8")
-        # s16 builds on head_path (== pages_path at normal scale): the
-        # 4->16 ratio below reuses the headline hi floor, which is
-        # measured on head_path — at tiny n_pages (<400) the two corpora
-        # differ and mixing them would corrupt the ratio
-        t16 = run1(16, head_path, "s16")
-        ceil416 = machine_ceiling(4, 16)
-        queries["index_docs_per_sec_local2"] = round(n_pages / t2, 1)
-        queries["index_docs_per_sec_local8"] = round(n_pages / t8, 1)
-        queries["scaling_efficiency_2_8"] = round((t2 / t8) / 4.0, 3)
-        queries["machine_parallel_ceiling_4_16"] = round(ceil416, 3)
-        for tag in ("s2", "s8"):
-            shutil.rmtree(os.path.join(work, f"idx{tag}"),
-                          ignore_errors=True)
-
-        head_pair("c")  # third spread sample, ~10 min after the first
-
-        head_pair("d")  # fourth spread sample
-
         # -- 2. query latency over the built index -----------------------
-        spark = get_spark("bench-query", master="local[16]",
-                          shuffle_partitions=32)
+        spark = get_spark("bench-query", master=f"local[{cpus}]",
+                          shuffle_partitions=cpus * 2)
         from modern_search_engines_spark.plans.build import load_index
-        idx = load_index(spark, os.path.join(work, "idxs16"))
+        idx = load_index(spark, query_index)
         comp = idx["postings_compressed"]
         dim = idx["doc_dim"]
         nb = idx["stats"]["n_buckets"]
@@ -331,7 +286,7 @@ def main() -> None:
         # hot serving path (plans/hot.py): same index, same WAND, no
         # Spark job per query — the interactive-latency tier
         from modern_search_engines_spark.plans.hot import HotSearcher
-        hot = HotSearcher(os.path.join(work, "idxs16"))
+        hot = HotSearcher(query_index)
         hot.search(BENCH_QUERIES[0][1], top_k=100)  # warm caches
         hot_lats = []
         for _, qtext in BENCH_QUERIES:
@@ -345,7 +300,7 @@ def main() -> None:
             hot_lats[max(0, int(len(hot_lats) * 0.95) - 1)], 4)
         spark.stop()
 
-        head_pair("e")  # fifth spread sample
+        head_pair("c")  # third spread sample
 
         # -- 3. driver-contract queries at the sf dir --------------------
         # min-of-2 with the two samples taken ~20 min apart in FRESH
@@ -355,14 +310,14 @@ def main() -> None:
         # accumulated session are weather, not measurement. Same cure as
         # the headline's spread protocol, applied per entry.
         def contract_pass() -> None:
-            spark = get_spark("bench-contract", master="local[16]",
-                              shuffle_partitions=32)
+            spark = get_spark("bench-contract", master=f"local[{cpus}]",
+                              shuffle_partitions=cpus * 2)
             try:
                 # untimed warm-up: python workers + one cold read of
                 # each input table, so first-touch I/O/codegen doesn't
                 # land on whichever entry scans a table first (semdedup
                 # read 7.3 s cold vs 0.75 s steady before this)
-                _warm_session(spark, 16)
+                _warm_session(spark, cpus)
                 for t in ("documents", "embeddings", "events",
                           "lineitem"):
                     p = os.path.join(sf_dir, f"{t}.parquet")
@@ -383,8 +338,9 @@ def main() -> None:
                 spark.stop()
 
         contract_pass()
-        spark = get_spark("bench-curation", master="local[16]",
-                          shuffle_partitions=32)
+        head_pair("d")  # fourth spread sample
+        spark = get_spark("bench-curation", master=f"local[{cpus}]",
+                          shuffle_partitions=cpus * 2)
 
         # -- 3b. curation pipeline stage timings (jobs/clean_corpus
         # surface): the composed decontam -> line-dedup -> PII -> cap
@@ -408,12 +364,14 @@ def main() -> None:
         shutil.rmtree(clean_dir, ignore_errors=True)
         spark.stop()
 
-        # final spread sample (~25+ min after the first), then the
-        # headline metrics from the 6 spread-out floors
-        head_pair("f")
+        head_pair("e")  # fifth spread sample
 
         contract_pass()  # second per-entry sample, fresh session,
         # ~15-20 min after the first — queries[] keeps the min
+
+        # final spread sample, then the headline metrics from the 6
+        # spread-out floors
+        head_pair("f")
 
         # corroboration-triggered extra sampling: the headline is a
         # FLOOR (min per level), so what matters is whether the minimum
@@ -445,23 +403,7 @@ def main() -> None:
         queries["headline_n_pairs"] = len(samples["lo"])
 
         t_lo, t_hi = min(samples["lo"]), min(samples["hi"])
-        # second t16 sample, spread ~25 min after the first — on
-        # head_path, same corpus as the headline hi floor it is
-        # ratioed against
-        t16 = min(t16, run1(16, head_path, "s16b"))
-        shutil.rmtree(os.path.join(work, "idxs16b"), ignore_errors=True)
-        queries["index_docs_per_sec_local16"] = round(n_head / t16, 1)
-        # knee documentation, 4->16: local[4] side = the headline hi
-        # floor (same head_path corpus, same job config; min-of-6 vs
-        # s16's min-of-2 — still slightly CONSERVATIVE for the ratio,
-        # since the floor t4 is the better-sampled of the two
-        # estimators)
-        queries["index_docs_per_sec_local4_1x"] = round(n_head / t_hi, 1)
-        queries["scaling_efficiency_4_16"] = round((t_hi / t16) / 4.0, 3)
-        queries["scaling_efficiency_4_16_vs_ceiling"] = round(
-            min((t_hi / t16) / 4.0 / ceil416, 1.0), 3) \
-            if ceil416 > 0 else 0.0
-        th_lo, th_hi = n_head / t_lo, n_head / t_hi
+        th_lo, th_hi = n_pages / t_lo, n_pages / t_hi
         eff = (th_hi / th_lo) / (hi / lo)
         ceiling = machine_ceiling(lo, hi)
         queries[f"index_build_local{lo}_sec"] = round(t_lo, 3)
@@ -472,8 +414,6 @@ def main() -> None:
         queries["machine_parallel_ceiling"] = round(ceiling, 3)
         queries["scaling_efficiency_vs_ceiling"] = round(
             min(eff / ceiling, 1.0), 3) if ceiling > 0 else 0.0
-        if head_path != pages_path:
-            shutil.rmtree(head_path, ignore_errors=True)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

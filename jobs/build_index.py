@@ -5,7 +5,7 @@
         --pages /data/pages_parquet --out /data/index \
         [--ngram-max 3] [--n-buckets 64] [--n-salts 8] [--n-shards 1] \
         [--n-extract-chunks 1] [--use-doc2query] [--synthetic N] \
-        [--positional] [--anchor] [--bucket-tf] [--warm]
+        [--positional] [--anchor] [--warm]
 
 The same script runs on a multi-executor cluster (north rule: "runs via
 spark-submit --py-files on multi-executor clusters") — only
@@ -55,12 +55,6 @@ def main(argv: list[str] | None = None) -> int:
                          "the corpus' real link graph) for BM25F "
                          "retrieval (operators/anchortext.py, "
                          "operators/bm25f.py)")
-    ap.add_argument("--bucket-tf", action="store_true",
-                    help="write the tf stage partitioned by term-hash "
-                         "bucket so raw-tf query paths (bm25f, tfidf) "
-                         "dir-prune to their terms' buckets — the "
-                         "10^12-doc layout; costs one extra shuffle "
-                         "at build")
     ap.add_argument("--synthetic", type=int, default=0,
                     help="generate N synthetic pages instead of --pages")
     ap.add_argument("--warm", action="store_true",
@@ -104,8 +98,7 @@ def main(argv: list[str] | None = None) -> int:
             n_shards=args.n_shards,
             n_extract_chunks=args.n_extract_chunks,
             use_doc2query=args.use_doc2query,
-            positional=args.positional, anchor=args.anchor,
-            bucket_tf=args.bucket_tf, verbose=True)
+            positional=args.positional, anchor=args.anchor, verbose=True)
         # total build wall (excludes session/JVM startup): the number a
         # spark-submit N-vs-4N scaling comparison reads directly
         print(json.dumps({"stats": idx["stats"],

@@ -55,8 +55,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--k", type=int, default=100)
     ap.add_argument("--method", default="wand",
                     choices=("wand", "bm25", "tfidf", "phrase", "bm25f"))
-    ap.add_argument("--anchor-weight", type=float, default=2.0,
-                    help="BM25F anchor-field weight (body weight is 1)")
     ap.add_argument("--rerank-diversity", type=float, default=None,
                     help="MMR diversity in [0,1]; reference batch run "
                          "uses 0.1 (relevance_importance=0.9)")
@@ -104,9 +102,7 @@ def main(argv: list[str] | None = None) -> int:
                 raise SystemExit("--method bm25f needs an index built "
                                  "with --anchor")
             from modern_search_engines_spark.operators import bm25f
-            results = bm25f.run_bm25f_batch(
-                spark, queries, idx, k=args.k,
-                w_anchor=args.anchor_weight)
+            results = bm25f.run_bm25f_batch(spark, queries, idx, k=args.k)
         else:
             idx["tfidf"] = indexing.build_tfidf(idx["tf"],
                                                 idx["term_stats"])

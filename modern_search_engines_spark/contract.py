@@ -19,6 +19,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+# the batch path's BM25F field weights: the bm25f entry and its DuckDB
+# twin read the one definition
+from .operators.bm25f import W_ANCHOR as BM25F_W_ANCHOR
+from .operators.bm25f import W_BODY as BM25F_W_BODY
 from .operators.indexing import bm25_saturation
 from .operators.topk import ranked_topk
 from .oracle.engine import B, K1
@@ -1319,8 +1323,6 @@ def q_anchor_text_terms(spark, sf):
     return res.select("doc_id", "term", "anchor_tf", "rank")
 
 
-BM25F_W_BODY = 1.0
-BM25F_W_ANCHOR = 2.0  # anchors upweighted — the classic web prior
 BM25F_TOPK = 50
 
 

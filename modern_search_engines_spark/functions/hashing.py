@@ -1,19 +1,29 @@
-"""Pure-python xxHash64 matching Spark's ``F.xxhash64`` (seed 42).
+"""The term-hash layout key: ``bucket = pmod(xxhash64(term), n_buckets)``.
 
-Why: the query path prunes the postings scan to ``pmod(xxhash64(term),
-n_buckets)`` buckets. The terms are driver-side (a query has a handful),
-so computing their buckets must not cost a Spark job — 0.5 s of pure
+Every bucketed table (a built index's ``postings_compressed``,
+``anchor_field`` and ``positional_postings``, and the flat reference
+``bm25_postings`` of ``indexing.build_index``) is written partitioned by
+this one key (``bucket_col``) and read through this one pruner
+(``prune``), so the writer and every reader cannot disagree about where
+a term lives.
+
+Why a pure-python twin: the query path prunes each scan to the query
+terms' buckets. The terms are driver-side (a query has a handful), so
+computing their buckets must not cost a Spark job — 0.5 s of pure
 scheduling overhead per query measured. This is the standard public
 xxHash64 algorithm (Yann Collet's spec); Spark hashes the UTF-8 bytes of
 a string with seed 42, then ``pmod`` into buckets.
 
 Parity with the JVM implementation is property-tested in
-``tests/test_hashing.py`` (random + real vocabulary strings); the
-pruning path falls back to a Spark job if parity is ever violated at
-runtime (``bucket_of`` is verified against a canary at import).
+``tests/test_hashing.py`` (random + real vocabulary strings) and checked
+against a canary of JVM-captured hashes (``self_check``) before any
+pruning: if the twin ever disagrees with the JVM, ``prune`` and the hot
+serving tier raise ``RuntimeError`` rather than read the wrong buckets.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -108,3 +118,39 @@ def self_check() -> bool:
     """True iff the pure-python implementation matches the JVM canary."""
     return all(xxh64_signed(s.encode("utf-8")) == h
                for s, h in _CANARY.items())
+
+
+def require_twin() -> None:
+    """Refuse to prune with a twin that disagrees with the JVM."""
+    if not self_check():
+        raise RuntimeError("xxhash64 twin failed its canary check")
+
+
+def bucket_col(col: str, n_buckets: int) -> Column:
+    """The layout key as a Spark expression. Every bucketed table's
+    ``bucket`` partition column is written as ``bucket_col("term", n)``,
+    i.e. ``pmod(xxhash64("term"), n)``; ``bucket_of`` is its twin."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets))
+
+
+def prune(df: DataFrame, terms: list[str],
+          n_buckets: int | None) -> DataFrame:
+    """Partition-prune a bucketed table to the buckets of ``terms``.
+
+    ``bucket`` is the table's partition column, so this predicate
+    becomes parquet partition pruning — only the matching bucket
+    directories are read (SURVEY.md §4 "bucketed postings"). The bucket
+    count must be the one the table was built with (a built index
+    records it in ``corpus_stats.json``); ``n_buckets=None`` returns the
+    table unpruned — a full, correct scan.
+
+    Bucket ids come from the pure-python twin (``bucket_of``): a handful
+    of driver-side hashes, never a Spark job. No terms selects nothing.
+    """
+    if n_buckets is None:
+        return df
+    require_twin()
+    buckets = sorted({bucket_of(t, n_buckets) for t in terms})
+    if not buckets:
+        return df.where(F.lit(False))
+    return df.where(F.col("bucket").isin(buckets))

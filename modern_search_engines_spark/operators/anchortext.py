@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions import hashing
+
 ANCHOR_PAIRS_SCHEMA = T.ArrayType(T.StructType([
     T.StructField("href", T.StringType()),
     T.StructField("anchor", T.StringType()),
@@ -77,9 +79,10 @@ def build_anchor_field(pages: DataFrame, indexed_ids: DataFrame,
       the same term space as tf/postings and joins by term;
     * the (doc_id, term) count is one map-side-combinable shuffle
       (power-law in-link skew arrives as per-task partials);
-    * ``bucket`` = pmod(xxhash64(term), n_buckets) — the postings
-      tables' partition key, so anchor scans prune to query-term
-      buckets exactly like the scoring postings.
+    * ``bucket`` = ``hashing.bucket_col("term", n_buckets)`` — the
+      postings tables' partition key, so anchor scans prune to
+      query-term buckets (``hashing.prune``) exactly like the scoring
+      postings.
     """
     pairs_udf = make_anchor_pairs_udf()
     pairs = pages.select("url", pairs_udf("url", "html").alias("ps"))
@@ -120,8 +123,7 @@ def _aggregate_anchor_terms(pairs: DataFrame, indexed_ids: DataFrame,
             .select("doc_id", F.explode(tok_udf("anchor")).alias("term"))
             .groupBy("doc_id", "term")
             .agg(F.count(F.lit(1)).alias("anchor_tf"))
-            .withColumn("bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(n_buckets))))
+            .withColumn("bucket", hashing.bucket_col("term", n_buckets)))
 
 
 def build_field_norms(tf: DataFrame, anchor_field: DataFrame) -> DataFrame:

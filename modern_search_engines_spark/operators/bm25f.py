@@ -27,13 +27,23 @@ by the same key, one shuffle each — then the scoring expression and
 top-k are identical to the single-field path (F1–F11 reuse). wdl is a
 per-doc scalar built from per-field doc lengths with the same outer
 join on doc_id.
+
+The field weights are the constants ``W_BODY`` and ``W_ANCHOR``
+(anchors upweighted — the classic web prior); the batch path and the
+contract's SQL twin read the same two names. Only the anchor field is
+term-hash bucketed (``functions.hashing``); the body tf table is one
+flat layout, term-filtered after the scan.
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import hashing
 from .indexing import bm25_saturation
+
+W_BODY = 1.0
+W_ANCHOR = 2.0
 
 
 def combine_fields(fields: list[tuple[DataFrame, float]],
@@ -86,8 +96,7 @@ def score_bm25f(wtf: DataFrame, wdl: DataFrame, idf: DataFrame,
 
 
 def run_bm25f_batch(spark, queries: list[tuple[str, str]], index: dict,
-                    k: int = 100, w_body: float = 1.0,
-                    w_anchor: float = 2.0) -> DataFrame:
+                    k: int = 100) -> DataFrame:
     """Batch BM25F retrieval over a built index with an anchor field
     (``build_persistent_index(anchor=True)``): body tf (stage ``tf``) +
     anchor tf (stage ``anchor_field``) combined before saturation,
@@ -97,48 +106,38 @@ def run_bm25f_batch(spark, queries: list[tuple[str, str]], index: dict,
     not the reference's field/recency-multiplied production score.
 
     Plan shape: query terms broadcast to both field scans (the anchor
-    scan partition-prunes to the query terms' buckets; the body tf
-    table is term-filtered post-scan — at 10^12 docs the tf stage
-    would be written bucket-partitioned too, same key), field combine
-    as a union + one (qid, doc_id, term) groupBy (one shuffle, no
-    null-key full-outer gymnastics), then doc_id-keyed norms join and
-    the same per-(qid, doc) sum as the single-field path. avg_wdl is
-    one tiny aggregate over field_norms (all indexed docs); an empty
-    field_norms (an index with no indexed docs) raises ValueError."""
+    scan partition-prunes to the query terms' buckets through
+    ``hashing.prune``; the flat body tf table is term-filtered by the
+    broadcast join), field combine as a union + one (qid, doc_id, term)
+    groupBy (one shuffle, no null-key full-outer gymnastics), then
+    doc_id-keyed norms join and the same per-(qid, doc) sum as the
+    single-field path. avg_wdl is one tiny aggregate over field_norms
+    (all indexed docs); an empty field_norms (an index with no indexed
+    docs) raises ValueError."""
     from . import query as q
 
     rows = q.query_term_rows(queries)
     terms = spark.createDataFrame(
         rows, "qid string, term string, qtf long, w double")
-    n_buckets = index["stats"]["n_buckets"]
-    anchor = q.prune_postings(index["anchor_field"], terms, n_buckets,
-                              term_list=[r[1] for r in rows])
+    anchor = hashing.prune(index["anchor_field"], [r[1] for r in rows],
+                           index["stats"]["n_buckets"])
     wdl = index["field_norms"].select(
         "doc_id",
-        (F.col("doc_len").cast("double") * F.lit(float(w_body))
+        (F.col("doc_len").cast("double") * F.lit(W_BODY)
          + F.col("anchor_len").cast("double")
-         * F.lit(float(w_anchor))).alias("wdl"))
+         * F.lit(W_ANCHOR)).alias("wdl"))
     avg_wdl = wdl.agg(F.avg("wdl")).collect()[0][0]
     if avg_wdl is None:
         raise ValueError("bm25f: the index's field_norms stage is empty "
                          "(no indexed documents to score)")
-    body_tf = index["tf"]
-    if "bucket" in body_tf.columns:
-        # bucket-partitioned tf layout (build's bucket_tf=True): the
-        # body scan dir-prunes to the query terms' buckets like the
-        # anchor/postings scans — at 10^12 docs this is the difference
-        # between touching |query-term buckets| directories and full-
-        # scanning the index's biggest table per batch
-        body_tf = q.prune_postings(body_tf, terms, n_buckets,
-                                   term_list=[r[1] for r in rows])
-    body_part = (body_tf.join(F.broadcast(terms), "term")
+    body_part = (index["tf"].join(F.broadcast(terms), "term")
                  .select("qid", "term", "doc_id", "qtf", "w",
                          (F.col("tf").cast("double")
-                          * F.lit(float(w_body))).alias("part")))
+                          * F.lit(W_BODY)).alias("part")))
     anchor_part = (anchor.join(F.broadcast(terms), "term")
                    .select("qid", "term", "doc_id", "qtf", "w",
                            (F.col("anchor_tf").cast("double")
-                            * F.lit(float(w_anchor))).alias("part")))
+                            * F.lit(W_ANCHOR)).alias("part")))
     wtf = (body_part.unionByName(anchor_part)
            .groupBy("qid", "doc_id", "term")
            .agg(F.sum("part").alias("wtf"),

@@ -27,7 +27,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import udfs
+from ..functions import hashing, udfs
 from ..oracle.engine import B, K1, PINNED_NOW, RECENCY_LAMBDA
 
 MAX_HTML_CHARS = 5_000_000  # Document.py:62-64
@@ -230,9 +230,8 @@ def _partial_score_expr(avgdl: float):
 
 
 def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
-                        doc_fields: DataFrame, avgdl: float,
-                        n_buckets: int = 64) -> DataFrame:
-    """(term, bucket, doc_id, score) with score = the idf-less partial.
+                        doc_fields: DataFrame, avgdl: float) -> DataFrame:
+    """(term, doc_id, score) with score = the idf-less partial.
 
     This is the fact-table side of the deferred-idf split: idf is a
     PER-TERM multiplier, so joining term_stats here would put the
@@ -248,17 +247,11 @@ def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
     that exists at 10^12 docs, where the per-doc dims are corpus-sized,
     and its N→4N scaling is clean (a broadcast's HashedRelation build is
     driver-SERIAL: it measurably caps the 1→4 core ratio even while
-    lowering both absolute times). ``bucket`` =
-    pmod(xxhash64(term), n_buckets) is the postings partition key →
-    query-time partition pruning (SURVEY.md §4)."""
+    lowering both absolute times). The postings partition key is added
+    by the consumer (``hashing.bucket_col``)."""
     return (
         tf.join(doc_len, "doc_id").join(doc_fields, "doc_id")
-        .select(
-            "term",
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("bucket"),
-            "doc_id",
-            _partial_score_expr(avgdl).alias("score"),
-        )
+        .select("term", "doc_id", _partial_score_expr(avgdl).alias("score"))
     )
 
 
@@ -269,9 +262,12 @@ def build_bm25_postings(tf: DataFrame, term_stats: DataFrame,
     (BM25Ranker.py:18-26) of ``build_index``, the naive reference the
     tests hold the compressed index to: the idf-less partial
     (``build_bm25_partials``) × idf, the same double product the
-    compressed stage stores."""
+    compressed stage stores, partitioned by the term-hash layout key
+    (``hashing.bucket_col``) that ``query.run_batch`` prunes."""
     return (
-        build_bm25_partials(tf, doc_len, doc_fields, avgdl, n_buckets)
+        build_bm25_partials(tf, doc_len, doc_fields, avgdl)
+        .select("term", hashing.bucket_col("term", n_buckets).alias("bucket"),
+                "doc_id", "score")
         .join(term_stats.select("term", "idf"), "term")
         .select("term", "bucket", "doc_id",
                 (F.col("score") * F.col("idf")).alias("score"))

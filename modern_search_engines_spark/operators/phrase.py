@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..functions import hashing
+
 
 def positional_postings(docs: DataFrame, tokens_col,
                         id_col: str = "doc_id") -> DataFrame:
@@ -95,8 +97,7 @@ def phrase_occurrences_batch(ptok: DataFrame,
     terms = sorted({t for _, toks in phrases for t in toks})
     if not terms:
         raise ValueError("no non-empty phrases")
-    if n_buckets is not None:
-        ptok = prune_positional(ptok, terms, n_buckets)
+    ptok = hashing.prune(ptok, terms, n_buckets)
     offs = spark.createDataFrame(
         [(qid, t, i, len(toks))
          for qid, toks in phrases for i, t in enumerate(toks)],
@@ -157,36 +158,12 @@ def bucketed_positional_postings(extracted: DataFrame,
                                  n_buckets: int = 64) -> DataFrame:
     """(doc_id, pos, term, bucket) over the body unigram stream
     (``doc_unigrams`` — same cleaned tokens the tf stage counts), with
-    the SAME term-hash bucket key as the scoring postings
-    (operators/postings.py): ``bucket`` becomes the stage's partition
-    column, so a phrase query's scan is dir-pruned to its terms'
-    buckets exactly like BM25 retrieval is."""
+    the one term-hash layout key (``hashing.bucket_col``): ``bucket``
+    becomes the stage's partition column, so a phrase query's scan is
+    dir-pruned to its terms' buckets (``hashing.prune``) exactly like
+    BM25 retrieval is."""
     ptok = positional_postings(extracted, F.col("doc_unigrams"))
-    return ptok.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-
-
-def prune_positional(ptok: DataFrame, terms: list[str],
-                     n_buckets: int = 64) -> DataFrame:
-    """Partition-prune a bucketed positional table to the query terms'
-    buckets (driver-side xxhash64 twin, canary-checked; Spark-job
-    fallback) — same contract as query.prune_postings."""
-    from ..functions import hashing
-
-    if hashing.self_check():
-        buckets = sorted({hashing.bucket_of(t, n_buckets)
-                          for t in set(terms)})
-    else:
-        spark = ptok.sparkSession
-        tdf = spark.createDataFrame([(t,) for t in set(terms)],
-                                    "term string")
-        buckets = sorted({
-            r["b"] for r in
-            tdf.select(F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                       .alias("b")).distinct().collect()})
-    if not buckets:
-        return ptok.where(F.lit(False))
-    return ptok.where(F.col("bucket").isin(buckets))
+    return ptok.withColumn("bucket", hashing.bucket_col("term", n_buckets))
 
 
 def phrase_topk(ptok: DataFrame, phrase: list[str], k: int = 50,
@@ -197,8 +174,7 @@ def phrase_topk(ptok: DataFrame, phrase: list[str], k: int = 50,
     as bucket-partitioned and the scan is pruned first."""
     from .topk import ranked_topk
 
-    if n_buckets is not None:
-        ptok = prune_positional(ptok, phrase, n_buckets)
+    ptok = hashing.prune(ptok, phrase, n_buckets)
     hits = phrase_occurrences(ptok, phrase, id_col=id_col)
     return ranked_topk(hits, [F.desc("ptf"), F.asc(id_col)], k,
                        key_col=id_col).select(id_col, "ptf", "rank")

@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from ..functions import codec
+from ..functions import codec, hashing
 
 BLOBS_SCHEMA = T.StructType([
     T.StructField("n", T.LongType()),
@@ -131,7 +131,7 @@ def build_compressed_postings(bm25_postings: DataFrame,
     bytes are identical."""
     with_keys = bm25_postings.select(
         "term",
-        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("bucket"),
+        hashing.bucket_col("term", n_buckets).alias("bucket"),
         _doc_idx().alias("doc_idx"),
         F.col("score").cast("double").alias("score"),
     ).withColumn("salt", F.pmod(F.xxhash64("doc_idx"), F.lit(n_salts)))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .. import textlib
+from ..functions import hashing
 
 
 def query_term_rows(queries: list[tuple[str, str]],
@@ -44,43 +45,6 @@ def query_terms_df(spark: SparkSession, queries: list[tuple[str, str]],
     return spark.createDataFrame(
         query_term_rows(queries, ngram_max),
         "qid string, term string, qtf long, w double")
-
-
-def prune_postings(postings: DataFrame, terms: DataFrame,
-                   n_buckets: int | None = None,
-                   term_list: list[str] | None = None) -> DataFrame:
-    """Partition-prune the postings scan to the query terms' buckets.
-
-    ``bucket`` is the postings table's partition column, so this predicate
-    becomes parquet partition pruning — only the matching bucket
-    directories are read (SURVEY.md §4 "bucketed postings"). The bucket
-    count must be the one the table was built with (a built index
-    records it in ``corpus_stats.json``); ``n_buckets=None`` returns the
-    table unpruned — a full, correct scan.
-
-    Bucket ids come from the pure-python xxhash64 twin
-    (``functions.hashing``, canary-checked against the JVM) when the term
-    strings are available driver-side — computing a handful of hashes must
-    not cost a Spark job (~0.5 s of scheduling per query). Falls back to
-    the Spark job if ``term_list`` is absent and, on canary failure, stays
-    on the JVM path entirely.
-    """
-    from ..functions import hashing
-
-    if n_buckets is None:
-        return postings
-    if term_list is not None and hashing.self_check():
-        buckets = sorted({hashing.bucket_of(t, n_buckets)
-                          for t in term_list})
-    else:
-        buckets = sorted({
-            r["b"] for r in
-            terms.select(F.pmod(F.xxhash64("term"), F.lit(n_buckets))
-                         .alias("b")).distinct().collect()
-        })
-    if not buckets:
-        return postings.where(F.lit(False))
-    return postings.where(F.col("bucket").isin(buckets))
 
 
 def score_bm25(postings: DataFrame, terms: DataFrame) -> DataFrame:
@@ -132,15 +96,15 @@ def run_batch(spark: SparkSession, queries: list[tuple[str, str]],
     ``method="bm25"`` is the naive union-sum over the flat
     ``bm25_postings`` of ``indexing.build_index`` — the reference the
     WAND path over a built index is tested against; ``n_buckets``
-    prunes it as in ``prune_postings``. Returns (qid, rank, doc_id,
+    prunes it as in ``hashing.prune``. Returns (qid, rank, doc_id,
     score) ordered for the TSV run-file sink.
     """
     rows = query_term_rows(queries)
     terms = spark.createDataFrame(
         rows, "qid string, term string, qtf long, w double")
     if method == "bm25":
-        postings = prune_postings(index["bm25_postings"], terms, n_buckets,
-                                  term_list=[r[1] for r in rows])
+        postings = hashing.prune(index["bm25_postings"],
+                                 [r[1] for r in rows], n_buckets)
         scored = score_bm25(postings, terms)
     elif method == "tfidf":
         scored = score_tfidf(index["tfidf"], index["term_stats"], terms)

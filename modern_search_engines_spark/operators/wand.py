@@ -39,7 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions import codec
+from ..functions import codec, hashing
 
 
 class PostingCursor:
@@ -326,8 +326,7 @@ def run_wand(spark: SparkSession, queries: list[tuple[str, str]],
     terms = terms.select(
         "qid", "term",
         (F.col("qtf").cast("double") * F.col("w")).alias("mult"))
-    work = qmod.prune_postings(compressed, terms, n_buckets,
-                               term_list=[r[1] for r in rows])
+    work = hashing.prune(compressed, [r[1] for r in rows], n_buckets)
     joined = work.join(F.broadcast(terms), "term")
 
     def _wand_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:

@@ -36,7 +36,6 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
                            use_doc2query: bool = False,
                            positional: bool = False,
                            anchor: bool = False,
-                           bucket_tf: bool = False,
                            verbose: bool = True) -> dict:
     """Run (or resume) the full staged build; returns handles + stats.
 
@@ -166,27 +165,10 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
                                    "docs", inputs=("extracted",),
                                    sort_within=["doc_id"],
                                    params={"sorted_by": "doc_id"}))
-        tf_plan = indexing.build_tf(indexed, ngram_max)
-        tf_kwargs = {}
-        tf_params = {"use_doc2query": use_doc2query,
-                     "ngram_max": ngram_max}
-        if bucket_tf:
-            # opt-in term-hash-bucketed tf layout (the 10^12-doc
-            # default): raw-tf consumers (BM25F's body side, tfidf)
-            # then partition-prune to the query terms' buckets exactly
-            # like the postings scans, instead of full-scanning the
-            # index's biggest table per batch. Costs one extra shuffle
-            # at build (the partitioned write's co-location); params
-            # record it so toggling forces a tf rebuild on resume.
-            from pyspark.sql import functions as F
-            tf_plan = tf_plan.withColumn(
-                "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)))
-            tf_kwargs = {"partition_by": ["bucket"],
-                         "sort_within": ["term", "doc_id"]}
-            tf_params["bucket_tf_n_buckets"] = n_buckets
         f_tf = pool.submit(
-            sw.write_stage, tf_plan, "tf",
-            inputs=("extracted",), params=tf_params, **tf_kwargs)
+            sw.write_stage, indexing.build_tf(indexed, ngram_max), "tf",
+            inputs=("extracted",),
+            params={"use_doc2query": use_doc2query, "ngram_max": ngram_max})
         stats = f_stats.result()
         docs = f_docs.result()
         tf = f_tf.result()
@@ -217,7 +199,7 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
     # the vocabulary join never touches the posting-sized fact table
     # (see build_bm25_partials)
     partials = indexing.build_bm25_partials(tf, doc_len, doc_fields,
-                                            stats["avgdl"], n_buckets)
+                                            stats["avgdl"])
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_ts = pool.submit(sw.write_stage, term_stats_plan, "term_stats",
                            inputs=("tf",))

@@ -63,8 +63,7 @@ class HotSearcher:
         self.docs_rowgroups_total = 0
         self.docs_rowgroups_read = 0
         self.docs_rows_read = 0
-        if not hashing.self_check():  # pragma: no cover - canary
-            raise RuntimeError("xxhash64 twin failed its canary check")
+        hashing.require_twin()
 
     # -- bucket-pruned posting access ---------------------------------------
 

@@ -15,8 +15,8 @@ method → 400 ``{"error": "Retrieval method not supported"}``; bad JSON
 body → 400 ``{"error": "Invalid JSON"}``; any other verb → 405
 ``{"error": "Invalid request method"}`` (views.py:59-61). A body that is
 not a JSON object, a non-string ``query``, a ``top_k`` that is not an
-integer ≥ 1 or a ``diversity`` that is not a number → 400 before any
-work.
+integer in [1, ``MAX_TOP_K``] or a ``diversity`` that is not a number →
+400 before any work.
 
 ``POST /summarize``  body ``{"url_hash"}`` → ``{"summary": ...}``;
 empty, non-string or unknown url_hash → 404 ``{"error": "Document not
@@ -31,6 +31,12 @@ on the same ``phrase``/``top_k`` checks as /search.
 ``retrieval_method: "bm25f"`` on /search is likewise an EXTENSION
 value (body + in-link anchor-text fields): 400 when the index was
 built without ``anchor=True`` or the service can't run it.
+
+Work per request is bounded before any of it starts: a body declared
+larger than ``MAX_BODY_BYTES`` gets 413 ``{"error": "Request body too
+large"}`` without a byte of it being read, and ``top_k`` is capped at
+``MAX_TOP_K`` (a search body is a few hundred bytes and a result page
+tens of rows).
 
 The service lives in the long-running server process exactly as the
 reference keeps its unpickled index in the Django worker.
@@ -52,8 +58,11 @@ from collections.abc import Callable, Iterable
 
 log = logging.getLogger(__name__)
 
+MAX_BODY_BYTES = 64 << 10
+MAX_TOP_K = 1000
+
 _STATUS = {200: "200 OK", 400: "400 Bad Request", 404: "404 Not Found",
-           405: "405 Method Not Allowed",
+           405: "405 Method Not Allowed", 413: "413 Content Too Large",
            500: "500 Internal Server Error"}
 
 
@@ -65,11 +74,14 @@ def _json_response(start_response, status: int, payload) -> list[bytes]:
     return [body]
 
 
-def _read_json(environ) -> dict:
+def _content_length(environ) -> int:
     try:
-        n = int(environ.get("CONTENT_LENGTH") or 0)
+        return int(environ.get("CONTENT_LENGTH") or 0)
     except ValueError:
-        n = 0
+        return 0
+
+
+def _read_json(environ, n: int) -> dict:
     # read(-1) would block on a socket until the client closes it
     raw = environ["wsgi.input"].read(n) if n > 0 else b""
     return json.loads(raw.decode("utf-8"))
@@ -77,13 +89,14 @@ def _read_json(environ) -> dict:
 
 def _text_and_top_k(data: dict, key: str) -> tuple[str, int]:
     """The ``key`` text and ``top_k`` of a /search or /phrase body;
-    ValueError (→ 400) unless they are a string and an integer ≥ 1 (a
-    negative top_k would slice ranks from the end)."""
+    ValueError (→ 400) unless they are a string and an integer in
+    [1, MAX_TOP_K] (a negative top_k would slice ranks from the end)."""
     text, top_k = data.get(key, ""), data.get("top_k", 20)
     if not isinstance(text, str):
         raise ValueError(f"{key} must be a string")
-    if isinstance(top_k, bool) or not isinstance(top_k, int) or top_k < 1:
-        raise ValueError("top_k must be an integer >= 1")
+    if (isinstance(top_k, bool) or not isinstance(top_k, int)
+            or not 1 <= top_k <= MAX_TOP_K):
+        raise ValueError(f"top_k must be an integer in [1, {MAX_TOP_K}]")
     return text, top_k
 
 
@@ -141,8 +154,12 @@ def make_wsgi_app(service) -> Callable[[dict, Callable], Iterable[bytes]]:
         if environ.get("REQUEST_METHOD") != "POST":
             return _json_response(start_response, 405,
                                   {"error": "Invalid request method"})
+        n = _content_length(environ)
+        if n > MAX_BODY_BYTES:
+            return _json_response(start_response, 413,
+                                  {"error": "Request body too large"})
         try:
-            data = _read_json(environ)
+            data = _read_json(environ, n)
         except (json.JSONDecodeError, UnicodeDecodeError):
             return _json_response(start_response, 400,
                                   {"error": "Invalid JSON"})

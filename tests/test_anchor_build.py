@@ -4,6 +4,8 @@ batch retrieval (operators/bm25f.run_bm25f_batch), all verified
 against independent pure-python recomputation over the same pages."""
 import hashlib
 import math
+import os
+import re
 import shutil
 import tempfile
 
@@ -11,10 +13,7 @@ import pytest
 
 from modern_search_engines_spark import corpus, htmlx, textlib
 from modern_search_engines_spark.operators import bm25f, query as qmod
-from modern_search_engines_spark.plans.build import (
-    build_persistent_index,
-    load_index,
-)
+from modern_search_engines_spark.plans.build import build_persistent_index
 
 N_PAGES = 300
 NGRAM_MAX = 3
@@ -143,11 +142,10 @@ def test_anchor_field_matches_python_twin(spark, anchor_index):
 
 def test_run_bm25f_batch_matches_python_twin(spark, anchor_index):
     idx, _ = anchor_index
-    w_body, w_anchor, k = 1.0, 2.0, 30
+    w_body, w_anchor, k = bm25f.W_BODY, bm25f.W_ANCHOR, 30
     queries = [("q1", "internal castle"), ("q2", "tübingen")]
 
-    res = bm25f.run_bm25f_batch(spark, queries, idx, k=k,
-                                w_body=w_body, w_anchor=w_anchor)
+    res = bm25f.run_bm25f_batch(spark, queries, idx, k=k)
     got = [(r.qid, r.rank, r.doc_id, r.score) for r in res.collect()]
     assert got, "bm25f returned no rows"
 
@@ -189,43 +187,6 @@ def test_run_bm25f_batch_matches_python_twin(spark, anchor_index):
         assert [r for r, _, _ in mine] == list(range(1, len(mine) + 1))
 
 
-def test_bucket_tf_layout_is_result_identical(spark, tmp_path):
-    """bucket_tf=True (the 10^12-doc tf layout): tf stage is written
-    dir-partitioned by term-hash bucket so raw-tf query paths prune —
-    and every answer must be bit-identical to the flat layout."""
-    import os
-
-    from modern_search_engines_spark.operators import wand
-
-    pages = corpus.pages_df(spark, 120, seed=7)
-    idxs = {}
-    for tag, bucket_tf in (("flat", False), ("bucketed", True)):
-        out = str(tmp_path / tag)
-        build_persistent_index(spark, pages, out, verbose=False,
-                               anchor=True, bucket_tf=bucket_tf)
-        idxs[tag] = load_index(spark, out)
-    tf_dir = str(tmp_path / "bucketed" / "tf")
-    assert any(d.startswith("bucket=") for d in os.listdir(tf_dir))
-    assert "bucket" in idxs["bucketed"]["tf"].columns
-
-    queries = [("q1", "castle museum"), ("q2", "internal travel")]
-    for name, run in (
-        ("wand", lambda idx: wand.run_wand(
-            spark, queries, idx["postings_compressed"], idx["doc_dim"],
-            k=20, n_buckets=idx["stats"]["n_buckets"])),
-        ("bm25f", lambda idx: bm25f.run_bm25f_batch(
-            spark, queries, idx, k=20)),
-    ):
-        a = [tuple(r) for r in run(idxs["flat"]).collect()]
-        b = [tuple(r) for r in run(idxs["bucketed"]).collect()]
-        assert a == b, f"{name} diverged between tf layouts"
-        assert a, f"{name} returned no rows"
-    # tf consumers (term_stats) unaffected by the extra bucket column
-    a = sorted(tuple(r) for r in idxs["flat"]["term_stats"].collect())
-    b = sorted(tuple(r) for r in idxs["bucketed"]["term_stats"].collect())
-    assert a == b
-
-
 def test_anchor_scoring_changes_ranking_vs_body_only(spark, anchor_index):
     # "internal" is the synthetic corpus' in-corpus anchor text: with
     # the anchor field active its targets must outscore a body-only
@@ -234,8 +195,29 @@ def test_anchor_scoring_changes_ranking_vs_body_only(spark, anchor_index):
     anchored = {r.doc_id for r in idx["anchor_field"]
                 .select("doc_id").distinct().collect()}
     assert anchored
-    res = bm25f.run_bm25f_batch(spark, [("q", "internal")], idx, k=50,
-                                w_body=1.0, w_anchor=2.0)
+    res = bm25f.run_bm25f_batch(spark, [("q", "internal")], idx, k=50)
     hit_docs = {r.doc_id for r in res.collect()}
     assert hit_docs & anchored, (
         "no anchor-field target retrieved for its own anchor term")
+
+
+def test_bucket_dirs_hold_only_their_terms(anchor_index,
+                                           check_bucket_layout):
+    idx, _ = anchor_index
+    for name in ("anchor_field", "postings_compressed"):
+        check_bucket_layout(os.path.join(idx["writer"].base_dir, name),
+                            idx["stats"]["n_buckets"])
+
+
+def test_bm25f_anchor_scan_is_partition_pruned(spark, anchor_index):
+    # the anchor_field scan of the batch plan carries the query terms'
+    # bucket predicate as a PARTITION filter, not a post-scan filter
+    idx, _ = anchor_index
+    res = bm25f.run_bm25f_batch(spark, [("q", "internal castle")], idx)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "anchor_field" in ln]
+    assert scans, plan
+    for ln in scans:
+        filters = ln.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+        assert re.search(r"bucket#\d+( IN \(| = )", filters), ln

@@ -3,6 +3,7 @@
 import random
 import string
 
+import pytest
 from pyspark.sql import functions as F
 
 from modern_search_engines_spark.functions import hashing
@@ -35,3 +36,21 @@ def test_bucket_semantics_match_pmod(spark):
         "s", F.pmod(F.xxhash64("s"), F.lit(64)).alias("b")).collect()}
     for v in vals:
         assert hashing.bucket_of(v, 64) == got[v], repr(v)
+
+
+def test_failed_canary_refuses_to_prune(spark, monkeypatch):
+    # a twin that disagrees with the JVM must not pick buckets, and no
+    # Spark job may stand in for it: the pruner raises before planning
+    df = spark.createDataFrame([("castle", 0)], "term string, bucket int")
+    monkeypatch.setattr(hashing, "self_check", lambda: False)
+    sc = spark.sparkContext
+    group = "failed-canary-prune"
+    sc.setJobGroup(group, "prune with a failed canary")
+    try:
+        with pytest.raises(RuntimeError, match="canary"):
+            hashing.prune(df, ["castle", "museum"], 64)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # unpruned (n_buckets=None) needs no twin and stays available
+    assert hashing.prune(df, ["castle"], None) is df

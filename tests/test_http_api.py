@@ -3,6 +3,7 @@ request/response shapes (SearchEngineServer/api/views.py:34-88) over a
 real socket against a built index — request bodies, status codes, and
 error envelopes all match the Django handlers."""
 
+import io
 import json
 import logging
 import threading
@@ -15,7 +16,9 @@ from modern_search_engines_spark import corpus
 from modern_search_engines_spark.plans.build import (
     build_persistent_index, load_index,
 )
-from modern_search_engines_spark.plans.http_api import make_wsgi_app, serve
+from modern_search_engines_spark.plans.http_api import (
+    MAX_BODY_BYTES, MAX_TOP_K, make_wsgi_app, serve,
+)
 from modern_search_engines_spark.plans.serve import SearchService
 
 N, SEED = 50, 13
@@ -149,7 +152,6 @@ def test_unknown_path_is_404(base_url):
 def test_wsgi_app_without_socket(caplog):
     """The app is plain WSGI — usable under any server. Smoke it with a
     stub service and a hand-built environ (no Spark, no socket)."""
-    import io
 
     class Stub:
         def search(self, query, top_k=20, retrieval_method="bm25",
@@ -187,12 +189,23 @@ def test_wsgi_app_without_socket(caplog):
                for r in caplog.records)
 
 
+class _CappedInput(io.BytesIO):
+    """A request body that fails any read past the app's body cap."""
+
+    def read(self, n=-1):
+        assert 0 <= n <= MAX_BODY_BYTES, f"read({n}) past the body cap"
+        return super().read(n)
+
+
+# larger than the body cap: 413 before any of it is read
+_OVERSIZED = "x" * MAX_BODY_BYTES
+
+
 def _wsgi_post(app, path, payload):
-    import io
     body = json.dumps(payload).encode()
     environ = {"PATH_INFO": path, "REQUEST_METHOD": "POST",
                "CONTENT_LENGTH": str(len(body)),
-               "wsgi.input": io.BytesIO(body)}
+               "wsgi.input": _CappedInput(body)}
     captured = {}
     out = b"".join(app(environ, lambda s, h: captured.update(status=s)))
     return int(captured["status"][:3]), json.loads(out.decode())
@@ -231,19 +244,23 @@ def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
         status, err = _wsgi_post(app, "/search", payload)
         assert status == 400 and "error" in err, payload
 
-    # malformed bodies: a null/negative/boolean top_k (a negative one
-    # would slice ranks from the end), a non-string query, a
-    # non-numeric diversity, a JSON array instead of an object
-    for payload in ({"query": "castle", "top_k": None},
-                    {"query": "castle", "top_k": -2},
-                    {"query": "castle", "top_k": 0},
-                    {"query": "castle", "top_k": True},
-                    {"query": "castle", "top_k": "5"},
-                    {"query": 123},
-                    {"query": "castle", "diversity": None},
-                    ["castle"]):
+    # malformed bodies: a null/negative/boolean/over-cap top_k (a
+    # negative one would slice ranks from the end), a non-string query,
+    # a non-numeric diversity, a JSON array instead of an object, and
+    # a body over the size cap (413, unread)
+    for payload, want in (({"query": "castle", "top_k": None}, 400),
+                          ({"query": "castle", "top_k": -2}, 400),
+                          ({"query": "castle", "top_k": 0}, 400),
+                          ({"query": "castle", "top_k": True}, 400),
+                          ({"query": "castle", "top_k": "5"}, 400),
+                          ({"query": "castle", "top_k": MAX_TOP_K + 1},
+                           400),
+                          ({"query": 123}, 400),
+                          ({"query": "castle", "diversity": None}, 400),
+                          (["castle"], 400),
+                          ({"query": _OVERSIZED}, 413)):
         status, err = _wsgi_post(app, "/search", payload)
-        assert status == 400 and "error" in err, payload
+        assert status == want and "error" in err, payload
     for url_hash in (123, ["h"]):  # a non-string key names no document
         assert _wsgi_post(app, "/summarize", {"url_hash": url_hash}) == \
             (404, {"error": "Document not found"})
@@ -321,12 +338,16 @@ def test_phrase_endpoint(base_url, spark, idx_dir):
     status, err = _wsgi_post(app, "/phrase", {"phrase": phrase})
     assert status == 400 and "error" in err
 
-    # malformed /phrase bodies -> 400 before any Spark work
-    for payload in ({"phrase": phrase, "top_k": -1},
-                    {"phrase": phrase, "top_k": None},
-                    {"phrase": 7}, [phrase]):
+    # malformed /phrase bodies -> 400 (413 when over the size cap)
+    # before any Spark work
+    for payload, want in (({"phrase": phrase, "top_k": -1}, 400),
+                          ({"phrase": phrase, "top_k": None}, 400),
+                          ({"phrase": phrase, "top_k": MAX_TOP_K + 1},
+                           400),
+                          ({"phrase": 7}, 400), ([phrase], 400),
+                          ({"phrase": _OVERSIZED}, 413)):
         status, err = _wsgi_post(make_wsgi_app(svc), "/phrase", payload)
-        assert status == 400 and "error" in err, payload
+        assert status == want and "error" in err, payload
 
     # service without a phrase_search method (hot tier) -> clean 400
     class NoPhrase:

@@ -14,6 +14,7 @@ plans Catalyst actually produces, not just in docstrings:
 from pyspark.sql import functions as F
 
 from modern_search_engines_spark import corpus
+from modern_search_engines_spark.functions import hashing
 from modern_search_engines_spark.operators import indexing, query, wand
 from modern_search_engines_spark.plans.build import (
     build_persistent_index, load_index)
@@ -34,12 +35,12 @@ def test_query_path_pruned_and_broadcast(spark, tmp_path):
     idx = load_index(spark, out)
 
     queries = [("q1", "castle museum")]
-    terms = query.query_terms_df(spark, queries)
+    terms = [r[1] for r in query.query_term_rows(queries)]
     n_buckets = idx["stats"]["n_buckets"]
     # the latency-critical scan is postings_compressed (the WAND path):
     # its bucket predicate must reach the file scan as PARTITION pruning
-    comp_pruned = query.prune_postings(idx["postings_compressed"], terms,
-                                       n_buckets)
+    comp_pruned = hashing.prune(idx["postings_compressed"], terms,
+                                n_buckets)
     comp_plan = _plan(comp_pruned)
     assert ("PartitionFilters" in comp_plan
             and "bucket" in comp_plan), comp_plan

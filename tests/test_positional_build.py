@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from modern_search_engines_spark import corpus
+from modern_search_engines_spark.functions import hashing
 from modern_search_engines_spark.operators import phrase
 from modern_search_engines_spark.plans.build import (
     build_persistent_index, load_index,
@@ -34,6 +35,12 @@ def test_stage_layout_is_bucket_partitioned(built):
     assert os.path.exists(stage)
     buckets = [d for d in os.listdir(stage) if d.startswith("bucket=")]
     assert buckets, os.listdir(stage)
+
+
+def test_bucket_dirs_hold_only_their_terms(built, check_bucket_layout):
+    out, _ = built
+    for name in ("positional_postings", "postings_compressed"):
+        check_bucket_layout(os.path.join(out, name), N_BUCKETS)
 
 
 def test_positions_match_extracted_unigrams(spark, built):
@@ -73,7 +80,7 @@ def test_pruned_phrase_rank_identical(spark, built):
 def test_prune_reads_fewer_files(built):
     out, res = built
     ptok = res["positional_postings"]
-    one_term_plan = phrase.prune_positional(
+    one_term_plan = hashing.prune(
         ptok, ["castle"], N_BUCKETS)._jdf.queryExecution() \
         .executedPlan().toString()
     # partition filter must appear as a pushed partition predicate,
