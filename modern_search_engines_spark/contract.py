@@ -1337,11 +1337,10 @@ def q_bm25f_topk(spark, sf):
     from .operators import anchortext, bm25f
     docs = _docs(spark, sf)
     n = docs.count()
-    tf = _tf(spark, sf).cache()
+    tf = _tf(spark, sf)
     edges = _link_edges(docs.select("doc_id"), n)
     atf = anchortext.anchor_terms(
-        anchortext.link_anchor_rows(edges, docs,
-                                    n_tokens=ANCHOR_TOKENS)).cache()
+        anchortext.link_anchor_rows(edges, docs, n_tokens=ANCHOR_TOKENS))
     wtf = bm25f.combine_fields(
         [(tf, BM25F_W_BODY),
          (atf.withColumnRenamed("anchor_tf", "tf"), BM25F_W_ANCHOR)])

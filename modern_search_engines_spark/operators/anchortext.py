@@ -58,8 +58,8 @@ def make_anchor_pairs_udf():
 
 
 def build_anchor_field(pages: DataFrame, indexed_ids: DataFrame,
-                       ngram_max: int = 3,
-                       n_buckets: int = 64) -> DataFrame:
+                       ngram_max: int = 3, *,
+                       n_buckets: int) -> DataFrame:
     """The production anchor-field build stage: crawled pages →
     (doc_id, term, anchor_tf, bucket) over the corpus' REAL link graph.
 
@@ -92,8 +92,8 @@ def build_anchor_field(pages: DataFrame, indexed_ids: DataFrame,
 
 def build_anchor_field_from_extracted(extracted: DataFrame,
                                       indexed_ids: DataFrame,
-                                      ngram_max: int = 3,
-                                      n_buckets: int = 64) -> DataFrame:
+                                      ngram_max: int = 3, *,
+                                      n_buckets: int) -> DataFrame:
     """Same stage, fed from the extraction stage's ``anchor_pairs``
     column instead of re-parsing html: at 10^12 docs the html parse is
     the pipeline's dominant CPU, and the pairs were already collected
@@ -131,12 +131,15 @@ def build_field_norms(tf: DataFrame, anchor_field: DataFrame) -> DataFrame:
     normalizer reads at query time (candidate-keyed join instead of a
     corpus-wide aggregate per batch). ``doc_len`` is the body's
     full-multiset length (quirk A7); ``anchor_len`` likewise over the
-    anchor field, 0 for docs with no in-links (left join)."""
+    anchor field. A full outer join: 0 anchor_len for docs with no
+    in-links, 0 doc_len for anchor-only docs (no body tf), so every
+    doc either field can score has a norms row."""
     body = tf.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
     anch = anchor_field.groupBy("doc_id").agg(
         F.sum("anchor_tf").alias("anchor_len"))
-    return (body.join(anch, "doc_id", "left")
-            .select("doc_id", "doc_len",
+    return (body.join(anch, "doc_id", "full")
+            .select("doc_id",
+                    F.coalesce("doc_len", F.lit(0)).alias("doc_len"),
                     F.coalesce("anchor_len", F.lit(0)).alias("anchor_len")))
 
 

@@ -257,7 +257,7 @@ def build_bm25_partials(tf: DataFrame, doc_len: DataFrame,
 
 def build_bm25_postings(tf: DataFrame, term_stats: DataFrame,
                         doc_len: DataFrame, doc_fields: DataFrame,
-                        avgdl: float, n_buckets: int = 64) -> DataFrame:
+                        avgdl: float, *, n_buckets: int) -> DataFrame:
     """(term, bucket, doc_id, score) — the flat BM25 scores
     (BM25Ranker.py:18-26) of ``build_index``, the naive reference the
     tests hold the compressed index to: the idf-less partial
@@ -282,8 +282,8 @@ def build_tfidf(tf: DataFrame, term_stats: DataFrame) -> DataFrame:
 
 
 def build_index(pages: DataFrame, ngram_max: int = 3,
-                now: dt.datetime = PINNED_NOW,
-                n_buckets: int = 64) -> dict:
+                now: dt.datetime = PINNED_NOW, *,
+                n_buckets: int) -> dict:
     """Full logical index build; returns the stage DataFrames + stats.
 
     Callers materialize stages via ``sources.tables.write_stage`` for
@@ -297,7 +297,7 @@ def build_index(pages: DataFrame, ngram_max: int = 3,
     term_stats = build_term_stats(tf, stats["N"])
     doc_fields = build_doc_fields(indexed, stats["avg_date_ts"], now)
     postings = build_bm25_postings(tf, term_stats, doc_len, doc_fields,
-                                   stats["avgdl"], n_buckets)
+                                   stats["avgdl"], n_buckets=n_buckets)
     tfidf = build_tfidf(tf, term_stats)
     return {
         "extracted": extracted,

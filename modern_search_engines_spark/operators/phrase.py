@@ -71,7 +71,7 @@ def phrase_occurrences(ptok: DataFrame, phrase: list[str],
     spark = ptok.sparkSession
     offs = _offsets_df(spark, phrase)
     tagged = (
-        ptok.where(F.col("term").isin(list(set(phrase))))
+        ptok.where(F.col("term").isin(sorted(set(phrase))))
         .join(F.broadcast(offs), "term")
         .select(id_col, (F.col("pos") - F.col("off")).alias("anchor"),
                 "off")
@@ -154,8 +154,8 @@ def proximity_match(ptok: DataFrame, terms: list[str], window: int,
             .select(id_col).distinct())
 
 
-def bucketed_positional_postings(extracted: DataFrame,
-                                 n_buckets: int = 64) -> DataFrame:
+def bucketed_positional_postings(extracted: DataFrame, *,
+                                 n_buckets: int) -> DataFrame:
     """(doc_id, pos, term, bucket) over the body unigram stream
     (``doc_unigrams`` — same cleaned tokens the tf stage counts), with
     the one term-hash layout key (``hashing.bucket_col``): ``bucket``

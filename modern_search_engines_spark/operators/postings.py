@@ -103,8 +103,8 @@ def doc_dim_from_docs(docs: DataFrame) -> DataFrame:
 
 def build_compressed_postings(bm25_postings: DataFrame,
                               n_salts: int = 8,
-                              n_shards: int = 1,
-                              n_buckets: int = 64,
+                              n_shards: int = 1, *,
+                              n_buckets: int,
                               term_stats: DataFrame | None = None
                               ) -> DataFrame:
     """(term, bucket, shard, n, blobs…) — the salted two-phase build.

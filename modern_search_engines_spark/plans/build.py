@@ -124,7 +124,7 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
             f_pos = pool.submit(
                 sw.write_stage,
                 phrase_ops.bucketed_positional_postings(
-                    indexed_raw, n_buckets),
+                    indexed_raw, n_buckets=n_buckets),
                 "positional_postings", inputs=("extracted",),
                 partition_by=["bucket"], sort_within=["term", "doc_id"],
                 params={"n_buckets": n_buckets})
@@ -147,7 +147,7 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
                 sw.write_stage,
                 anchortext.build_anchor_field_from_extracted(
                     extracted, indexed_raw.select("doc_id"),
-                    ngram_max, n_buckets),
+                    ngram_max, n_buckets=n_buckets),
                 "anchor_field", inputs=("extracted",),
                 partition_by=["bucket"], sort_within=["term", "doc_id"],
                 params={"n_buckets": n_buckets,
@@ -158,8 +158,8 @@ def build_persistent_index(spark: SparkSession, pages: DataFrame,
             sw.drop_stage("field_norms")
         # docs sorted by doc_id within partitions (no shuffle): parquet
         # min/max stats then give tight per-row-group id ranges, which
-        # the hot serving tier's bounded doc-id lookup prunes on
-        # (plans/hot._doc_ids_of)
+        # the hot serving tier's bounded docs lookup prunes on
+        # (plans/hot.HotSearcher._doc_rows)
         f_docs = pool.submit(
             lambda: sw.write_stage(indexed_raw.select(*DOCS_DISPLAY_COLS),
                                    "docs", inputs=("extracted",),

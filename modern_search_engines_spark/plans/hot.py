@@ -18,14 +18,15 @@ see ``search``). Hot results are rank- and score-identical to the
 distributed WAND path (tested).
 
 Memory bounds: nothing whole-index lives in RAM. Read blobs are cached
-per (bucket) on an LRU-ish dict capped by ``MAX_CACHED_BUCKETS``; the
-doc_idx→doc_id display lookup resolves each query's ≤ k result ids with
-a row-group-pruned read of the docs parquet (``_doc_ids_of``): the
-build sorts the docs stage by doc_id, so parquet column statistics give
-tight per-row-group id ranges and a top-k resolution touches O(k) row
-groups out of the whole table — never a full-table dict (resolved ids
-land in a small capped cache). The full-scan fallback only applies to
-row groups whose stats are missing.
+per (bucket) on an LRU-ish dict capped by ``MAX_CACHED_BUCKETS``. One
+lookup, ``_doc_rows``, resolves each query's ≤ k result ids to their
+doc_id AND display fields with a row-group-pruned read of the docs
+parquet: the build sorts the docs stage by doc_id, so parquet column
+statistics give tight per-row-group id ranges and a top-k resolution
+touches O(k) row groups out of the whole table — never a full-table
+dict. Resolved rows land in a capped cache, so the display of a ranked
+list costs no second read. The full-scan fallback only applies to row
+groups whose stats are missing.
 """
 
 from __future__ import annotations
@@ -45,7 +46,7 @@ from .build import read_stats
 _BLOB_COLS = ["term", "shard", "n", "ids_blob", "scores_blob",
               "block_first", "block_max", "block_off"]
 MAX_CACHED_BUCKETS = 64  # one bucket's decoded rows per entry
-MAX_CACHED_DOC_IDS = 65536  # resolved doc_idx -> doc_id pairs
+MAX_CACHED_DOC_IDS = 65536  # resolved doc_idx -> display rows
 
 
 class HotSearcher:
@@ -55,7 +56,7 @@ class HotSearcher:
         self.index_dir = index_dir
         self.n_buckets = read_stats(index_dir)["n_buckets"]
         self._buckets: dict[int, dict[str, list[dict]]] = {}
-        self._doc_id_cache: dict[int, str] = {}
+        self._doc_cache: dict[int, dict] = {}
         self._docs_files: list[pq.ParquetFile] | None = None
         # row-group pruning observability (asserted by tests): the docs
         # table is never materialized whole — only stat-matching row
@@ -95,9 +96,11 @@ class HotSearcher:
                 f.metadata.num_row_groups for f in self._docs_files)
         return self._docs_files
 
-    def _doc_ids_of(self, doc_idxs: list[int]) -> dict[int, str]:
-        """doc_idx → doc_id for ≤ k result ids, via row-group-pruned
-        parquet reads (bounded memory at any corpus size).
+    def _doc_rows(self, doc_idxs: list[int]) -> dict[int, dict]:
+        """doc_idx → docs row (doc_id and the display fields) for ≤ k
+        result ids, via row-group-pruned parquet reads (bounded memory
+        at any corpus size). The one docs reader: ranking resolves
+        doc_ids with it, and display reads the same cached rows.
 
         ``doc_idx`` is the integer value of the doc_id's first 15 hex
         chars (operators/postings._doc_idx), so the matching doc_ids
@@ -105,11 +108,11 @@ class HotSearcher:
         The build sorts the docs stage by doc_id within partitions, so
         parquet min/max column statistics prune to O(k) row groups; a
         row group with no doc_id stats is read (correct, just unpruned).
-        Resolved ids are cached (capped dict — the working set of an
+        Resolved rows are cached (capped dict — the working set of an
         interactive session, not the corpus)."""
-        missing = [i for i in doc_idxs if i not in self._doc_id_cache]
+        missing = [i for i in doc_idxs if i not in self._doc_cache]
         if not missing:
-            return self._doc_id_cache
+            return self._doc_cache
         prefixes = sorted(format(i, "015x") for i in set(missing))
         pref_set = set(prefixes)
         for pf in self._doc_parquet_files():
@@ -122,20 +125,22 @@ class HotSearcher:
                     # any wanted range [p, p+"g") intersecting [lo, hi]?
                     if not any(p <= hi and lo < p + "g" for p in prefixes):
                         continue
-                tbl = pf.read_row_group(rg, columns=["doc_id"])
+                tbl = pf.read_row_group(rg, columns=[
+                    "doc_id", "url", "title", "description", "icon_url"])
                 self.docs_rowgroups_read += 1
                 self.docs_rows_read += tbl.num_rows
-                ids = tbl.column("doc_id")
-                mask = pc.is_in(pc.utf8_slice_codeunits(ids, 0, 15),
-                                value_set=pa.array(prefixes))
-                for d in ids.filter(mask).to_pylist():
+                mask = pc.is_in(
+                    pc.utf8_slice_codeunits(tbl.column("doc_id"), 0, 15),
+                    value_set=pa.array(prefixes))
+                for row in tbl.filter(mask).to_pylist():
+                    d = row["doc_id"]
                     if d[:15] in pref_set:
-                        self._doc_id_cache[int(d[:15], 16)] = d
-        if len(self._doc_id_cache) > MAX_CACHED_DOC_IDS:
+                        self._doc_cache[int(d[:15], 16)] = row
+        if len(self._doc_cache) > MAX_CACHED_DOC_IDS:
             keep = set(doc_idxs)
-            self._doc_id_cache = {
-                i: d for i, d in self._doc_id_cache.items() if i in keep}
-        return self._doc_id_cache
+            self._doc_cache = {
+                i: r for i, r in self._doc_cache.items() if i in keep}
+        return self._doc_cache
 
     # -- query --------------------------------------------------------------
 
@@ -184,8 +189,9 @@ class HotSearcher:
         # inside the hot tier's driver-RAM bound anyway.
         order = np.lexsort((uniq, -sums))
         top = order[:top_k]
-        id_map = self._doc_ids_of([int(uniq[i]) for i in top])
-        return [(id_map[int(uniq[i])], float(sums[i])) for i in top]
+        rows = self._doc_rows([int(uniq[i]) for i in top])
+        return [(rows[int(uniq[i])]["doc_id"], float(sums[i]))
+                for i in top]
 
 
 class HotSearchService:
@@ -198,40 +204,35 @@ class HotSearchService:
     Retrieval is the hot tier's bm25 union-sum (rank-identical to the
     distributed WAND path); ``retrieval_method="tfidf"`` raises
     ValueError → the endpoint's 400, since tf-idf partials are not part
-    of the compressed hot artifact. Display fields resolve with a
-    stats-pruned pyarrow-dataset read of the docs stage (bounded at any
-    corpus size, like ``_doc_ids_of``); ``diversity`` is accepted for
-    endpoint-shape compatibility and raises loudly (MMR reranking needs
-    the LDA topic table — serve that combination from
-    ``SearchService``)."""
-
-    DISPLAY_COLS = ("url", "title", "description", "icon_url")
+    of the compressed hot artifact. Display fields come from the
+    searcher's one docs lookup (``HotSearcher._doc_rows``), which
+    already read and cached them while resolving the ranked doc_ids;
+    ``diversity`` is accepted for endpoint-shape compatibility and
+    raises loudly (MMR reranking needs the LDA topic table — serve that
+    combination from ``SearchService``)."""
 
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
         self.searcher = HotSearcher(index_dir)
 
-    def _display_rows(self, doc_ids: list[str]) -> dict[str, dict]:
-        import pyarrow.dataset as ds
-        dset = ds.dataset(os.path.join(self.index_dir, "docs"),
-                          format="parquet")
-        tbl = dset.to_table(columns=["doc_id", *self.DISPLAY_COLS],
-                            filter=ds.field("doc_id").isin(doc_ids))
-        return {r["doc_id"]: r for r in tbl.to_pylist()}
-
     def _results(self, ranked: list[tuple[str, float]]) -> list[dict]:
         """[(doc_id, score)] in rank order → reference-shaped dicts
         (DocumentIndex.__get_documents minus raw_text, which views.py
-        deletes before responding anyway)."""
-        if not ranked:  # an empty isin() filter is an Arrow type error
+        deletes before responding anyway). A ranked doc absent from the
+        docs stage is dropped."""
+        if not ranked:
             return []
-        rows = self._display_rows([d for d, _ in ranked])
-        return [{
-            "url": rows[d]["url"], "url_hash": d,
-            "title": rows[d]["title"],
-            "description": rows[d]["description"],
-            "icon_url": rows[d]["icon_url"], "score": score,
-        } for d, score in ranked if d in rows]
+        idxs = [int(d[:15], 16) for d, _ in ranked]
+        rows = self.searcher._doc_rows(idxs)
+        out = []
+        for (d, score), i in zip(ranked, idxs):
+            r = rows.get(i)
+            if r is not None and r["doc_id"] == d:
+                out.append({
+                    "url": r["url"], "url_hash": d, "title": r["title"],
+                    "description": r["description"],
+                    "icon_url": r["icon_url"], "score": score})
+        return out
 
     def search(self, query: str, top_k: int = 20,
                retrieval_method: str = "bm25",

@@ -140,31 +140,29 @@ def test_anchor_field_matches_python_twin(spark, anchor_index):
     assert {d: n[0] for d, n in norms.items()} == tf_lens
 
 
-def test_run_bm25f_batch_matches_python_twin(spark, anchor_index):
-    idx, _ = anchor_index
-    w_body, w_anchor, k = bm25f.W_BODY, bm25f.W_ANCHOR, 30
-    queries = [("q1", "internal castle"), ("q2", "tübingen")]
-
-    res = bm25f.run_bm25f_batch(spark, queries, idx, k=k)
-    got = [(r.qid, r.rank, r.doc_id, r.score) for r in res.collect()]
-    assert got, "bm25f returned no rows"
-
-    # pure-python recomputation from the committed stages
-    tf = {}
-    for r in idx["tf"].collect():
-        tf[(r.doc_id, r.term)] = r.tf
+def _bm25f_twin(idx, queries, k):
+    """Pure-python BM25F top-k per qid from the committed tf,
+    anchor_field and term_stats stages. Per-doc field lengths are
+    summed here, over every doc either field holds, not read from the
+    field_norms stage."""
+    w_body, w_anchor = bm25f.W_BODY, bm25f.W_ANCHOR
+    tf = {(r.doc_id, r.term): r.tf for r in idx["tf"].collect()}
     atf = {(r.doc_id, r.term): r.anchor_tf
            for r in idx["anchor_field"].collect()}
-    norms = {r.doc_id: w_body * r.doc_len + w_anchor * r.anchor_len
-             for r in idx["field_norms"].collect()}
+    body_len: dict[str, int] = {}
+    anchor_len: dict[str, int] = {}
+    for lens, field in ((body_len, tf), (anchor_len, atf)):
+        for (d, _), n in field.items():
+            lens[d] = lens.get(d, 0) + n
+    norms = {d: w_body * body_len.get(d, 0) + w_anchor * anchor_len.get(d, 0)
+             for d in body_len.keys() | anchor_len.keys()}
     avg_wdl = sum(norms.values()) / len(norms)
     idf = {r.term: r.idf for r in idx["term_stats"].collect()}
 
-    def score(qid_query):
-        _, qtext = qid_query
-        qrows = qmod.query_term_rows([("q", qtext)])
+    out = {}
+    for qid, qtext in queries:
         per_doc: dict[str, float] = {}
-        for _, term, qtf, w in qrows:
+        for _, term, qtf, w in qmod.query_term_rows([("q", qtext)]):
             if term not in idf:
                 continue
             docs = ({d for (d, t) in tf if t == term}
@@ -175,16 +173,52 @@ def test_run_bm25f_batch_matches_python_twin(spark, anchor_index):
                 sat = (wtf * (K1 + 1)
                        / (wtf + K1 * (1 - B + B * norms[d] / avg_wdl)))
                 per_doc[d] = per_doc.get(d, 0.0) + qtf * w * idf[term] * sat
-        return per_doc
+        out[qid] = sorted(per_doc.items(),
+                          key=lambda kv: (-kv[1], kv[0]))[:k]
+    return out
 
-    for qid, qtext in queries:
-        exp = score((qid, qtext))
+
+def _assert_bm25f_matches_twin(spark, idx, queries, k):
+    res = bm25f.run_bm25f_batch(spark, queries, idx, k=k)
+    got = [(r.qid, r.rank, r.doc_id, r.score) for r in res.collect()]
+    assert got, "bm25f returned no rows"
+    twin = _bm25f_twin(idx, queries, k)
+    for qid, _ in queries:
         mine = [(r, d, s) for (q, r, d, s) in got if q == qid]
-        exp_order = sorted(exp.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        exp_order = twin[qid]
         assert [d for _, d, _ in mine] == [d for d, _ in exp_order]
         for (_, d, s), (_, es) in zip(mine, exp_order):
             assert s == pytest.approx(es, rel=1e-9)
         assert [r for r, _, _ in mine] == list(range(1, len(mine) + 1))
+    return got
+
+
+def test_run_bm25f_batch_matches_python_twin(spark, anchor_index):
+    idx, _ = anchor_index
+    _assert_bm25f_matches_twin(
+        spark, idx, [("q1", "internal castle"), ("q2", "tübingen")], k=30)
+
+
+def test_bm25f_scores_anchor_only_docs(spark, anchor_index):
+    # plant an indexed doc whose in-link anchor terms are its only
+    # terms (no body tf): field_norms must still give it a row
+    # (doc_len 0), so BM25F keeps its anchor score instead of dropping
+    # the doc at the norms join
+    from pyspark.sql import functions as F
+
+    from modern_search_engines_spark.operators import anchortext
+
+    idx, _ = anchor_index
+    planted = (idx["anchor_field"].where(F.col("term") == "internal")
+               .orderBy("doc_id").first().doc_id)
+    tf = idx["tf"].where(F.col("doc_id") != planted)
+    norms = anchortext.build_field_norms(tf, idx["anchor_field"])
+    assert [(r.doc_len, r.anchor_len > 0) for r in
+            norms.where(F.col("doc_id") == planted).collect()] == [(0, True)]
+    got = _assert_bm25f_matches_twin(
+        spark, {**idx, "tf": tf, "field_norms": norms},
+        [("q", "internal castle")], k=N_PAGES)
+    assert planted in {d for _, _, d, _ in got}
 
 
 def test_anchor_scoring_changes_ranking_vs_body_only(spark, anchor_index):

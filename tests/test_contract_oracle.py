@@ -82,3 +82,14 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns == ["doc_id", "score", "rank"]
+
+
+def test_bm25f_topk_leaves_no_cached_rdds(spark):
+    """The entry leaves nothing persisted in the session once its
+    result is collected."""
+    def persistent():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persistent()
+    assert entrymod.queries()["bm25f_topk"](spark, SF).collect()
+    assert persistent() == before

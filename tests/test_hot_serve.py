@@ -11,7 +11,8 @@ from modern_search_engines_spark.operators import wand
 from modern_search_engines_spark.oracle import OracleEngine
 from modern_search_engines_spark.oracle.engine import doc_from_page
 from modern_search_engines_spark.plans.build import build_persistent_index
-from modern_search_engines_spark.plans.hot import HotSearcher
+from modern_search_engines_spark.plans.hot import (HotSearcher,
+                                                   HotSearchService)
 
 N, SEED = 60, 17
 
@@ -68,14 +69,17 @@ def test_hot_absent_terms(index_dir):
     assert hot.search("zzqqxx absent", top_k=5) == []
 
 
-def test_hot_doc_id_lookup_is_rowgroup_pruned(index_dir, tmp_path):
-    """The doc_idx→doc_id resolution must NEVER materialize the docs
-    table: with a doc_id-sorted docs file split into many row groups,
-    a top-k search reads only the stat-matching groups and O(k) rows."""
+def test_hot_doc_id_lookup_is_rowgroup_pruned(index_dir, tmp_path,
+                                              monkeypatch):
+    """The docs lookup (doc_idx→doc_id and display fields) must NEVER
+    materialize the docs table: with a doc_id-sorted docs file split
+    into many row groups, a top-k search reads only the stat-matching
+    groups and O(k) rows, and the service's display rows come from that
+    same read, never from a pyarrow dataset scan."""
     import glob
     import shutil
 
-    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
     import pyarrow.parquet as pq
 
     idx2 = str(tmp_path / "idx2")
@@ -103,3 +107,24 @@ def test_hot_doc_id_lookup_is_rowgroup_pruned(index_dir, tmp_path):
     before = hot.docs_rowgroups_read
     assert hot.search(QUERIES[0], top_k=5) == got
     assert hot.docs_rowgroups_read == before
+
+    # the service displays from the searcher's one lookup: same dicts
+    # as on the original index, ≤ k row groups, none on a repeat
+    want = HotSearchService(index_dir).search(QUERIES[0], top_k=5)
+    assert [d["url_hash"] for d in want] == [d for d, _ in got]
+
+    dataset = ds.dataset
+
+    def no_docs_dataset(source, *a, **k):
+        # pq.read_table (the bucket reads) builds datasets too
+        if str(source).startswith(docs_dir):
+            raise AssertionError("display scanned a docs dataset")
+        return dataset(source, *a, **k)
+
+    monkeypatch.setattr(ds, "dataset", no_docs_dataset)
+    service = HotSearchService(idx2)
+    assert service.search(QUERIES[0], top_k=5) == want
+    assert 0 < service.searcher.docs_rowgroups_read <= 5
+    before = service.searcher.docs_rowgroups_read
+    assert service.search(QUERIES[0], top_k=5) == want
+    assert service.searcher.docs_rowgroups_read == before

@@ -202,7 +202,9 @@ _OVERSIZED = "x" * MAX_BODY_BYTES
 
 
 def _wsgi_post(app, path, payload):
-    body = json.dumps(payload).encode()
+    """POST ``payload`` (JSON-encoded, or sent as is when bytes)."""
+    body = payload if isinstance(payload, bytes) else \
+        json.dumps(payload).encode()
     environ = {"PATH_INFO": path, "REQUEST_METHOD": "POST",
                "CONTENT_LENGTH": str(len(body)),
                "wsgi.input": _CappedInput(body)}
@@ -246,8 +248,10 @@ def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
 
     # malformed bodies: a null/negative/boolean/over-cap top_k (a
     # negative one would slice ranks from the end), a non-string query,
-    # a non-numeric diversity, a JSON array instead of an object, and
-    # a body over the size cap (413, unread)
+    # a non-numeric diversity, a JSON array instead of an object, a
+    # body that is not UTF-8, and a body over the size cap (413,
+    # unread); a query with no terms (empty, whitespace, punctuation)
+    # is well-formed and matches nothing
     for payload, want in (({"query": "castle", "top_k": None}, 400),
                           ({"query": "castle", "top_k": -2}, 400),
                           ({"query": "castle", "top_k": 0}, 400),
@@ -258,9 +262,14 @@ def test_hot_adapter_serves_same_ranking_without_spark(base_url, idx_dir):
                           ({"query": 123}, 400),
                           ({"query": "castle", "diversity": None}, 400),
                           (["castle"], 400),
-                          ({"query": _OVERSIZED}, 413)):
-        status, err = _wsgi_post(app, "/search", payload)
-        assert status == want and "error" in err, payload
+                          (b'{"query": "caf\xe9"}', 400),
+                          ({"query": _OVERSIZED}, 413),
+                          ({"query": ""}, 200),
+                          ({"query": " \t\n "}, 200),
+                          ({"query": "?! ... ;-)"}, 200)):
+        status, out = _wsgi_post(app, "/search", payload)
+        assert status == want, payload
+        assert (out == []) if want == 200 else ("error" in out), payload
     for url_hash in (123, ["h"]):  # a non-string key names no document
         assert _wsgi_post(app, "/summarize", {"url_hash": url_hash}) == \
             (404, {"error": "Document not found"})

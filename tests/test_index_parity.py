@@ -48,7 +48,7 @@ def oracle(pages):
 def spark_index(spark, pages):
     df = corpus.pages_df(spark, N_PAGES, seed=SEED, n_pdf=2,
                          num_partitions=4).drop("text", "lang")
-    idx = indexing.build_index(df)
+    idx = indexing.build_index(df, n_buckets=64)
     # cache the shared upstream stages once for the module's assertions
     idx["tf"] = idx["tf"].cache()
     idx["bm25_postings"] = idx["bm25_postings"].cache()

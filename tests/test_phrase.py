@@ -3,6 +3,7 @@
 randomized brute-force cross-check."""
 
 import random
+import re
 
 from pyspark.sql import functions as F
 
@@ -149,6 +150,19 @@ def test_phrase_plan_broadcasts_offsets(spark):
         ptok, ["a", "b"])._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_phrase_plan_lists_terms_in_sorted_order(spark):
+    """The phrase-term filter's IN list is sorted, not in set order, so
+    one phrase plans the same in every Python process."""
+    words = ["f", "e", "d", "c", "b", "a"]
+    ptok = _ptok(spark, [" ".join(words)])
+    plan = phrase.phrase_occurrences(
+        ptok, words)._jdf.queryExecution().optimizedPlan().toString()
+    in_lists = re.findall(r"term#\d+ IN \(([^)]*)\)", plan)
+    assert in_lists, plan
+    for listed in in_lists:
+        assert listed.split(",") == sorted(words), plan
 
 
 def test_batch_matches_per_phrase(spark):

@@ -87,7 +87,8 @@ def test_doc_colocated_joins_one_exchange(spark, tmp_path):
     doc_fields = indexing.build_doc_fields(ext, stats["avg_date_ts"])
     term_stats = indexing.build_term_stats(tf, stats["N"])
     bm25 = indexing.build_bm25_postings(tf, term_stats, doc_len,
-                                        doc_fields, stats["avgdl"])
+                                        doc_fields, stats["avgdl"],
+                                        n_buckets=64)
     plan = _plan(bm25)
     # sanity: it's a join plan that does not cartesian
     assert "CartesianProduct" not in plan
@@ -104,7 +105,7 @@ def test_compressed_postings_two_exchanges(spark):
     flat = spark.createDataFrame(
         [(f"t{i % 7}", f"{i:032x}", float(i)) for i in range(50)],
         "term string, doc_id string, score double")
-    comp = postings.build_compressed_postings(flat)
+    comp = postings.build_compressed_postings(flat, n_buckets=64)
     plan = _plan(comp)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 2, f"{n_exchanges} exchanges:\n{plan}"

@@ -24,7 +24,7 @@ from modern_search_engines_spark.operators import indexing, postings
 def bm25(spark):
     pages = corpus.pages_df(spark, 60, seed=21,
                             num_partitions=4).drop("text", "lang")
-    idx = indexing.build_index(pages)
+    idx = indexing.build_index(pages, n_buckets=64)
     return idx["bm25_postings"].cache()
 
 
@@ -42,23 +42,25 @@ def test_merge_equals_from_scratch(spark, bm25):
     half_a = bm25.where(split == 0)
     half_b = bm25.where(split == 1)
 
-    comp_a = postings.build_compressed_postings(half_a, n_salts=4)
-    comp_b = postings.build_compressed_postings(half_b, n_salts=4)
+    comp_a = postings.build_compressed_postings(half_a, n_salts=4,
+                                                n_buckets=64)
+    comp_b = postings.build_compressed_postings(half_b, n_salts=4,
+                                                n_buckets=64)
     merged = postings.merge_compressed_postings(comp_a, comp_b)
 
-    full = postings.build_compressed_postings(bm25, n_salts=4)
+    full = postings.build_compressed_postings(bm25, n_salts=4, n_buckets=64)
     assert _blob_map(merged) == _blob_map(full)  # byte-identical
 
 
 def test_merge_idempotent_on_empty_delta(spark, bm25):
-    comp = postings.build_compressed_postings(bm25, n_salts=4)
+    comp = postings.build_compressed_postings(bm25, n_salts=4, n_buckets=64)
     empty = comp.where(F.lit(False))
     merged = postings.merge_compressed_postings(comp, empty)
     assert _blob_map(merged) == _blob_map(comp)
 
 
 def test_delete_docs(spark, bm25):
-    comp = postings.build_compressed_postings(bm25, n_salts=4)
+    comp = postings.build_compressed_postings(bm25, n_salts=4, n_buckets=64)
     all_idx = sorted(
         r["doc_idx"]
         for r in postings.doc_dim(bm25).select("doc_idx").collect())
@@ -71,7 +73,8 @@ def test_delete_docs(spark, bm25):
     surviving = bm25.where(
         ~F.conv(F.substring("doc_id", 1, 15), 16, 10).cast("long")
         .isin([int(d) for d in dead]))
-    expected = postings.build_compressed_postings(surviving, n_salts=4)
+    expected = postings.build_compressed_postings(surviving, n_salts=4,
+                                                  n_buckets=64)
     assert _blob_map(stripped) == _blob_map(expected)
 
     # no deleted id survives anywhere
@@ -83,7 +86,7 @@ def test_delete_docs(spark, bm25):
 
 
 def test_delete_all_docs_drops_lists(spark, bm25):
-    comp = postings.build_compressed_postings(bm25, n_salts=4)
+    comp = postings.build_compressed_postings(bm25, n_salts=4, n_buckets=64)
     all_idx = [r["doc_idx"]
                for r in postings.doc_dim(bm25).select("doc_idx").collect()]
     assert postings.delete_docs_from_postings(comp, all_idx).count() == 0

@@ -123,9 +123,10 @@ def test_wand_end_to_end_rank_identical(spark):
 
     df = corpus.pages_df(spark, n_pages, seed=seed,
                          num_partitions=4).drop("text", "lang")
-    idx = indexing.build_index(df)
+    idx = indexing.build_index(df, n_buckets=64)
     bm25 = idx["bm25_postings"].cache()
-    comp = postings.build_compressed_postings(bm25, n_salts=4, n_shards=2)
+    comp = postings.build_compressed_postings(bm25, n_salts=4, n_shards=2,
+                                              n_buckets=64)
     dim = postings.doc_dim(bm25)
 
     queries = [("q1", "castle museum"), ("q2", "university lecture"),
@@ -146,9 +147,10 @@ def test_wand_end_to_end_rank_identical(spark):
 def test_compressed_postings_roundtrip_spark(spark):
     df = corpus.pages_df(spark, 30, seed=3, num_partitions=2
                          ).drop("text", "lang")
-    idx = indexing.build_index(df)
+    idx = indexing.build_index(df, n_buckets=64)
     bm25 = idx["bm25_postings"].cache()
-    comp = postings.build_compressed_postings(bm25, n_salts=4, n_shards=1)
+    comp = postings.build_compressed_postings(bm25, n_salts=4, n_shards=1,
+                                              n_buckets=64)
     # every (term, doc) pair must survive compression exactly
     raw = {(r["term"], r["doc_id"]): r["score"] for r in bm25.collect()}
     dim = {r["doc_idx"]: r["doc_id"]
