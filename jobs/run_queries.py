@@ -5,18 +5,19 @@
         [--k 100] [--method wand|bm25|tfidf|phrase|bm25f]
 
 Replicates the reference's batch runner (batch_retrieve.py:11-38): TSV
-queries ``qid\\tquery`` in, one distributed scoring pass for ALL queries,
-TSV run file ``qid\\trank\\turl\\tscore`` out. ``--method wand`` (and its
-alias ``bm25``) uses the block-max WAND path over compressed postings,
-rank-identical to the naive union-sum. The bucket-pruned scans (wand,
-phrase, bm25f) use the bucket count the index records in
-``corpus_stats.json``.
+queries ``qid\\tquery`` in, one distributed scoring pass for ALL queries
+(``query.run_batch``, the entry point ``SearchService`` answers tfidf,
+bm25f and phrase through), TSV run file ``qid\\trank\\turl\\tscore`` out.
+``--method wand`` (and its alias ``bm25``) uses the block-max WAND path
+over compressed postings, rank-identical to the naive union-sum.
 ``--method phrase`` treats each query as one exact phrase and scores by
 occurrence count over the positional layer (requires an index built
-with ``--positional``) — one bucket-pruned pass for all phrases.
-``--method bm25f`` scores body + in-link anchor-text fields combined
-before the k1 saturation (requires an index built with ``--anchor``;
-an extension method, operators/bm25f.py).
+with ``--positional``). ``--method bm25f`` scores body + in-link
+anchor-text fields combined before the k1 saturation (requires an index
+built with ``--anchor``; an extension method, operators/bm25f.py). A
+method whose layer the index lacks exits non-zero naming the build
+flag. The bucket-pruned scans use the bucket count the index records in
+``corpus_stats.json``.
 
 ``--rerank-diversity D`` applies the reference's MMR diversification
 before writing (batch_retrieve.py:33 calls rank_documents with
@@ -61,7 +62,6 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     from modern_search_engines_spark.operators import query as qmod
-    from modern_search_engines_spark.operators import indexing, wand
     from modern_search_engines_spark.plans.build import load_index
     from modern_search_engines_spark.session import get_spark
     from modern_search_engines_spark.sources.tables import read_queries_tsv
@@ -70,44 +70,11 @@ def main(argv: list[str] | None = None) -> int:
     try:
         idx = load_index(spark, args.index)
         queries = read_queries_tsv(spark, args.queries)
-        n_buckets = idx["stats"]["n_buckets"]
-        if args.method in ("wand", "bm25"):
-            results = wand.run_wand(spark, queries,
-                                    idx["postings_compressed"],
-                                    idx["doc_dim"], k=args.k,
-                                    n_buckets=n_buckets)
-        elif args.method == "phrase":
-            # each query line is one exact phrase; score = occurrence
-            # count over the positional layer, one pass for all queries
-            if idx.get("positional_postings") is None:
-                raise SystemExit("--method phrase needs an index built "
-                                 "with --positional")
-            from pyspark.sql import functions as F
-            from modern_search_engines_spark import textlib
-            from modern_search_engines_spark.operators import (
-                phrase as phrase_ops,
-            )
-            phrases = [(qid, textlib.tokenize(q, 1)) for qid, q in queries]
-            phrases = [(qid, toks) for qid, toks in phrases if toks]
-            hits = phrase_ops.phrase_occurrences_batch(
-                idx["positional_postings"], phrases, n_buckets=n_buckets)
-            results = qmod.topk(
-                hits.select("qid", "doc_id",
-                            F.col("ptf").cast("double").alias("score")),
-                args.k)
-        elif args.method == "bm25f":
-            # body + in-link anchor-text fields combined before the k1
-            # saturation (operators/bm25f.py) — an extension method
-            if idx.get("anchor_field") is None:
-                raise SystemExit("--method bm25f needs an index built "
-                                 "with --anchor")
-            from modern_search_engines_spark.operators import bm25f
-            results = bm25f.run_bm25f_batch(spark, queries, idx, k=args.k)
-        else:
-            idx["tfidf"] = indexing.build_tfidf(idx["tf"],
-                                                idx["term_stats"])
+        try:
             results = qmod.run_batch(spark, queries, idx, k=args.k,
-                                     method="tfidf")
+                                     method=args.method)
+        except ValueError as exc:  # e.g. the method's layer is missing
+            raise SystemExit(f"--method {args.method}: {exc}") from None
         if args.rerank_diversity is not None:
             results = _rerank_results(
                 spark, args.index, results, 1.0 - args.rerank_diversity)

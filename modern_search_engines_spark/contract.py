@@ -130,9 +130,7 @@ def q_bm25_topk(spark, sf):
     J1+A9+O1/O2 over the documents table."""
     docs = _docs(spark, sf)
     n = docs.count()
-    # tf feeds three lineages (dl, idf, scoring): cache it once so the
-    # tokenize+explode+groupBy subtree doesn't execute three times.
-    tf = _tf(spark, sf).cache()
+    tf = _tf(spark, sf)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     avgdl = dl.agg(F.avg("dl")).collect()[0][0]
     idf = (tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -157,7 +155,7 @@ def q_tfidf_topk(spark, sf):
     over matching terms; qtf=1 per distinct term here)."""
     docs = _docs(spark, sf)
     n = docs.count()
-    tf = _tf(spark, sf).cache()  # feeds idf + scoring lineages
+    tf = _tf(spark, sf)
     idf = (tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
            .withColumn("idf", F.log(F.lit(float(n)) / F.col("df"))))
     qterms = spark.createDataFrame(
@@ -1184,7 +1182,7 @@ def q_phrase_match_topk(spark, sf):
     from .operators import phrase
     docs = _docs(spark, sf)
     ptok = phrase.positional_postings(docs, _tokens_col())
-    hits = phrase.phrase_occurrences(ptok, list(PHRASE))
+    hits = phrase.phrase_occurrences_batch(ptok, [("q", list(PHRASE))])
     return ranked_topk(hits, [F.desc("ptf"), F.asc("doc_id")], 50,
                        key_col="doc_id").select("doc_id", "ptf", "rank")
 
@@ -1197,7 +1195,7 @@ def q_bm25_conj_topk(spark, sf):
     groupBy that accumulates the score: zero extra shuffles."""
     docs = _docs(spark, sf)
     n = docs.count()
-    tf = _tf(spark, sf).cache()
+    tf = _tf(spark, sf)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     avgdl = dl.agg(F.avg("dl")).collect()[0][0]
     idf = (tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -1331,9 +1329,9 @@ def q_bm25f_topk(spark, sf):
     Zaragoza simple BM25F; the reference scores body text only,
     BM25Ranker.py:18-61): body tf (weight 1) + in-link anchor-field tf
     (weight 2) combined linearly BEFORE the k1 saturation, weighted
-    doc length in the normalizer, body-field idf. Same plan family as
-    the single-field path — broadcast query terms, (doc_id, term)- and
-    doc_id-keyed joins, one groupBy sum (``operators/bm25f.py``)."""
+    doc length in the normalizer, body-field idf. Scored by the serving
+    kernel (``operators/bm25f.score``) with every query term at
+    mult 1.0 and norms from ``anchortext.build_field_norms``."""
     from .operators import anchortext, bm25f
     docs = _docs(spark, sf)
     n = docs.count()
@@ -1341,21 +1339,15 @@ def q_bm25f_topk(spark, sf):
     edges = _link_edges(docs.select("doc_id"), n)
     atf = anchortext.anchor_terms(
         anchortext.link_anchor_rows(edges, docs, n_tokens=ANCHOR_TOKENS))
-    wtf = bm25f.combine_fields(
-        [(tf, BM25F_W_BODY),
-         (atf.withColumnRenamed("anchor_tf", "tf"), BM25F_W_ANCHOR)])
-    wdl = bm25f.combine_doc_lengths(
-        [(tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")),
-          BM25F_W_BODY),
-         (atf.groupBy("doc_id").agg(F.sum("anchor_tf").alias("dl")),
-          BM25F_W_ANCHOR)])
-    avg_wdl = float(wdl.agg(F.avg("wdl")).collect()[0][0])
     idf = (tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
            .select("term", F.log(F.lit(float(n)) / F.col("df"))
                    .alias("idf")))
     qterms = spark.createDataFrame(
-        [(t,) for t in BM25_QUERY_TERMS], "term string")
-    scored = bm25f.score_bm25f(wtf, wdl, idf, qterms, avg_wdl=avg_wdl)
+        [("q", t, 1.0) for t in BM25_QUERY_TERMS],
+        "qid string, term string, mult double")
+    scored = bm25f.score(qterms, tf, atf,
+                         anchortext.build_field_norms(tf, atf), idf).select(
+        "doc_id", F.round("score", 6).alias("score"))
     return ranked_topk(scored, [F.desc("score"), F.asc("doc_id")],
                        BM25F_TOPK, key_col="doc_id").select(
                            "doc_id", "score", "rank")
@@ -3266,8 +3258,8 @@ SELECT doc_id, term, anchor_tf, rank FROM rk WHERE rank <= {ANCHOR_TOPK}
 
 # BM25F twin: body + anchor field tfs combined linearly BEFORE the k1
 # saturation (the defining BM25F property), weighted doc length in the
-# normalizer, body-field idf; float tree identical to
-# operators/bm25f.score_bm25f
+# normalizer, body-field idf; the formula of the kernel
+# operators/bm25f.score at mult = 1.0 (both engines round to 6dp)
 _ORACLE["bm25f_topk"] = f"""
 WITH {_TOK_SQL},
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term),

@@ -26,47 +26,25 @@ Spark shape (the part that matters at 10^12 docs):
 """
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import hashing
 
-ANCHOR_PAIRS_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("href", T.StringType()),
-    T.StructField("anchor", T.StringType()),
-]))
 
-
-def make_anchor_pairs_udf():
-    """Arrow-batched (url, html) → array<struct<href, anchor>> — one
-    ``<a href>`` occurrence per element (``htmlx.extract_anchor_pairs``
-    rules; duplicates kept, each occurrence is one anchor vote)."""
-    from .. import htmlx
-
-    @F.pandas_udf(ANCHOR_PAIRS_SCHEMA)
-    def anchor_pairs_udf(url: pd.Series, html: pd.Series) -> pd.Series:
-        out = []
-        for u, h in zip(url, html):
-            if isinstance(h, (bytes, bytearray)):
-                h = bytes(h).decode("utf-8", errors="replace")
-            out.append(htmlx.extract_anchor_pairs(u, h or ""))
-        return pd.Series(out)
-
-    return anchor_pairs_udf
-
-
-def build_anchor_field(pages: DataFrame, indexed_ids: DataFrame,
-                       ngram_max: int = 3, *,
-                       n_buckets: int) -> DataFrame:
-    """The production anchor-field build stage: crawled pages →
-    (doc_id, term, anchor_tf, bucket) over the corpus' REAL link graph.
+def build_anchor_field_from_extracted(extracted: DataFrame,
+                                      indexed_ids: DataFrame,
+                                      ngram_max: int = 3, *,
+                                      n_buckets: int) -> DataFrame:
+    """The production anchor-field build stage: the extraction stage's
+    ``anchor_pairs`` column → (doc_id, term, anchor_tf, bucket) over the
+    corpus' REAL link graph.
 
     Pipeline (every step's scale shape):
-    * anchor-pair extraction is one Arrow-batched pass over the same
-      fetchable pages the extraction stage reads (html is consumed in
-      the map stage, never carried);
+    * the (href, anchor) pairs were collected in the extraction pass's
+      single html parse (``htmlx.extract_page``), so this stage is a
+      column read plus the aggregation, zero extra parses — at 10^12
+      docs the html parse is the pipeline's dominant CPU;
     * target id = md5(href) — the SAME id function as the extraction
       stage's md5(url) (P10), so resolving an edge to its target needs
       NO url-dimension join, just an inner join against the indexed
@@ -84,36 +62,11 @@ def build_anchor_field(pages: DataFrame, indexed_ids: DataFrame,
       query-term buckets (``hashing.prune``) exactly like the scoring
       postings.
     """
-    pairs_udf = make_anchor_pairs_udf()
-    pairs = pages.select("url", pairs_udf("url", "html").alias("ps"))
-    return _aggregate_anchor_terms(pairs, indexed_ids, ngram_max,
-                                   n_buckets)
-
-
-def build_anchor_field_from_extracted(extracted: DataFrame,
-                                      indexed_ids: DataFrame,
-                                      ngram_max: int = 3, *,
-                                      n_buckets: int) -> DataFrame:
-    """Same stage, fed from the extraction stage's ``anchor_pairs``
-    column instead of re-parsing html: at 10^12 docs the html parse is
-    the pipeline's dominant CPU, and the pairs were already collected
-    in the extraction pass (htmlx.extract_page) — this path is a
-    column read plus the aggregation, zero extra parses. The build
-    plan uses this whenever the committed extraction stage carries the
-    column (always, since it joined EXTRACTED_SCHEMA)."""
-    pairs = extracted.select("url", F.col("anchor_pairs").alias("ps"))
-    return _aggregate_anchor_terms(pairs, indexed_ids, ngram_max,
-                                   n_buckets)
-
-
-def _aggregate_anchor_terms(pairs: DataFrame, indexed_ids: DataFrame,
-                            ngram_max: int, n_buckets: int) -> DataFrame:
-    """(url, ps: array<struct<href, anchor>>) → the anchor_field table."""
     from ..functions import udfs
 
     tok_udf = udfs.make_tokenize_udf(ngram_max)
-    edges = (pairs
-             .select("url", F.explode("ps").alias("p"))
+    edges = (extracted
+             .select("url", F.explode("anchor_pairs").alias("p"))
              .filter(F.col("p.href") != F.col("url"))
              .select(F.md5(F.encode(F.col("p.href"), "UTF-8"))
                      .alias("doc_id"),

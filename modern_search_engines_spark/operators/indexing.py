@@ -262,8 +262,9 @@ def build_bm25_postings(tf: DataFrame, term_stats: DataFrame,
     (BM25Ranker.py:18-26) of ``build_index``, the naive reference the
     tests hold the compressed index to: the idf-less partial
     (``build_bm25_partials``) × idf, the same double product the
-    compressed stage stores, partitioned by the term-hash layout key
-    (``hashing.bucket_col``) that ``query.run_batch`` prunes."""
+    compressed stage stores, with the term-hash layout key
+    (``hashing.bucket_col``) as its ``bucket`` column; scored by
+    ``query.run_naive_bm25``."""
     return (
         build_bm25_partials(tf, doc_len, doc_fields, avgdl)
         .select("term", hashing.bucket_col("term", n_buckets).alias("bucket"),
@@ -298,7 +299,6 @@ def build_index(pages: DataFrame, ngram_max: int = 3,
     doc_fields = build_doc_fields(indexed, stats["avg_date_ts"], now)
     postings = build_bm25_postings(tf, term_stats, doc_len, doc_fields,
                                    stats["avgdl"], n_buckets=n_buckets)
-    tfidf = build_tfidf(tf, term_stats)
     return {
         "extracted": extracted,
         "docs": indexed,
@@ -308,5 +308,4 @@ def build_index(pages: DataFrame, ngram_max: int = 3,
         "term_stats": term_stats,
         "doc_fields": doc_fields,
         "bm25_postings": postings,
-        "tfidf": tfidf,
     }

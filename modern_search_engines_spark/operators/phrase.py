@@ -12,15 +12,16 @@ copied — there is no reference implementation to copy):
   partitioned by ``bucket(term_hash)`` exactly like the scoring postings
   (operators/postings.py), so a phrase query's scan is pruned to the
   phrase terms' buckets.
-* ``phrase_occurrences`` — phrase tf per doc in ONE shuffle, no
-  self-join chain: each posting row for a phrase term is tagged with the
-  term's offset(s) inside the phrase (a broadcast ≤L-row table; repeated
-  terms get one row per offset), ``anchor = pos - offset`` aligns every
-  token of a true occurrence on the same (id, anchor) key, and one
-  groupBy counts DISTINCT offsets == phrase length. The classic
-  positional-intersection join chain is L-1 shuffles of the same rows;
-  this anchor trick is one, and the pre-join ``term IN (phrase)`` filter
-  is pushed to the scan.
+* ``phrase_occurrences_batch`` — phrase tf per (query, doc) for many
+  phrases in ONE shuffle, no self-join chain: each posting row for a
+  phrase term is tagged with the term's offset(s) inside its phrase (a
+  broadcast table of Σ L rows; repeated terms get one row per offset),
+  ``anchor = pos - offset`` aligns every token of a true occurrence on
+  the same (qid, id, anchor) key, and one groupBy counts DISTINCT
+  offsets == phrase length. The classic positional-intersection join
+  chain is L-1 shuffles of the same rows; this anchor trick is one, and
+  the pre-join ``term IN (phrase terms)`` filter is pushed to the scan.
+  ``query.run_batch(method="phrase")`` ranks its output.
 * ``proximity_match`` — docs where all query terms co-occur within a
   ``window``-token span: per-doc ordered scan of the (tiny, pre-filtered)
   query-term postings carrying a running last-seen position per term;
@@ -34,7 +35,7 @@ All four stay JVM-side (no Python UDFs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import hashing
 
@@ -47,52 +48,21 @@ def positional_postings(docs: DataFrame, tokens_col,
     ).select(id_col, (F.col("pos0") + 1).alias("pos"), "term")
 
 
-def _offsets_df(spark: SparkSession, phrase: list[str]) -> DataFrame:
-    """Broadcastable (term, off) rows, one per occurrence of the term in
-    the phrase (0-based offset). Repeated phrase terms yield one row per
-    slot, so a single token row fans out to every slot it could fill."""
-    if not phrase:
-        raise ValueError("empty phrase")
-    return spark.createDataFrame(
-        [(t, i) for i, t in enumerate(phrase)], "term string, off int")
-
-
-def phrase_occurrences(ptok: DataFrame, phrase: list[str],
-                       id_col: str = "doc_id") -> DataFrame:
-    """(id, ptf) — number of occurrences of ``phrase`` as consecutive
-    tokens, one shuffle on (id, anchor).
-
-    A position can satisfy only one offset per anchor, so for an
-    occurrence anchored at a, the rows (a+i, term_i) for i in 0..L-1
-    each contribute offset i to group (id, a); countDistinct(off) == L
-    iff every slot matched. Over-counting is impossible: (id, pos, off)
-    triples are unique because ptok rows are unique per (id, pos).
-    """
-    spark = ptok.sparkSession
-    offs = _offsets_df(spark, phrase)
-    tagged = (
-        ptok.where(F.col("term").isin(sorted(set(phrase))))
-        .join(F.broadcast(offs), "term")
-        .select(id_col, (F.col("pos") - F.col("off")).alias("anchor"),
-                "off")
-    )
-    hits = (tagged.groupBy(id_col, "anchor")
-            .agg(F.countDistinct("off").alias("n_off"))
-            .where(F.col("n_off") == len(phrase)))
-    return hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("ptf"))
-
-
 def phrase_occurrences_batch(ptok: DataFrame,
                              phrases: list[tuple[str, list[str]]],
                              id_col: str = "doc_id",
                              n_buckets: int | None = None) -> DataFrame:
-    """(qid, id, ptf) for MANY phrases in one distributed pass — the
-    batch-retrieval discipline (operators/query.py run_batch): every
-    phrase's (term, offset) tags go into one broadcast table, one
-    groupBy counts distinct offsets per (qid, id, anchor) against the
-    phrase's own length, one more aggregates occurrence counts. With
-    ``n_buckets`` the scan is pruned to the union of the phrase terms'
-    buckets."""
+    """(qid, id, ptf) — occurrences of each (qid, phrase) as consecutive
+    tokens, every phrase in one distributed pass. With ``n_buckets``
+    the scan is pruned to the union of the phrase terms' buckets.
+
+    A position can satisfy only one offset per anchor, so for an
+    occurrence anchored at a, the rows (a+i, term_i) for i in 0..L-1
+    each contribute offset i to group (qid, id, a); countDistinct(off)
+    == L iff every slot matched. Over-counting is impossible: (qid, id,
+    pos, off) tuples are unique because ptok rows are unique per
+    (id, pos).
+    """
     spark = ptok.sparkSession
     terms = sorted({t for _, toks in phrases for t in toks})
     if not terms:
@@ -164,20 +134,6 @@ def bucketed_positional_postings(extracted: DataFrame, *,
     BM25 retrieval is."""
     ptok = positional_postings(extracted, F.col("doc_unigrams"))
     return ptok.withColumn("bucket", hashing.bucket_col("term", n_buckets))
-
-
-def phrase_topk(ptok: DataFrame, phrase: list[str], k: int = 50,
-                n_buckets: int | None = None,
-                id_col: str = "doc_id") -> DataFrame:
-    """(id, ptf, rank) — top-k docs by phrase occurrence count over a
-    positional table; when ``n_buckets`` is given the table is treated
-    as bucket-partitioned and the scan is pruned first."""
-    from .topk import ranked_topk
-
-    ptok = hashing.prune(ptok, phrase, n_buckets)
-    hits = phrase_occurrences(ptok, phrase, id_col=id_col)
-    return ranked_topk(hits, [F.desc("ptf"), F.asc(id_col)], k,
-                       key_col=id_col).select(id_col, "ptf", "rank")
 
 
 def conjunctive_match(tf: DataFrame, terms: list[str],

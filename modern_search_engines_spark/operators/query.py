@@ -1,20 +1,22 @@
-"""Batch BM25 / TF-IDF query engine (reference §3.2/§3.3 lifecycle).
+"""Batch retrieval over a built index (reference §3.2/§3.3 lifecycle).
 
-All queries are scored in ONE distributed pass (batch_retrieve.py:11-38
-shape): every query's terms go into a single small DataFrame that is
-broadcast-joined against the postings table, then one groupBy(qid, doc_id)
-accumulates the OR-semantics union sum, and one window takes the top-k per
-query. Query tokenization runs driver-side (queries are tiny —
-SURVEY.md T2).
+``run_batch`` is the one Spark entry point per retrieval method: the
+run_queries job and ``SearchService`` both call it, the way the
+reference answers ``POST /search`` and ``batch_retrieve.py`` through the
+same ``DocumentIndex.retrieve_*`` (DocumentIndex.py:219-230,
+batch_retrieve.py:33). Every method is one aggregate over all queries
+(batch_retrieve.py:11-38 shape) followed by one per-query top-k: every
+query's terms go into a single small DataFrame that is broadcast-joined
+against the scanned table, one groupBy(qid, doc_id) accumulates the
+score, and one window takes the top-k per query. Query tokenization runs
+driver-side (queries are tiny — SURVEY.md T2).
 
 Scale notes:
 * the query-terms side is broadcast (J1) — no shuffle of the postings;
-* the postings scan is partition-pruned to the buckets of the query terms
+* bucketed scans are partition-pruned to the buckets of the query terms
   (``bucket IN (...)`` on the partition column);
 * top-k is TakeOrderedAndProject per qid via window + filter — with AQE
-  the shuffle for the window is coalesced; k and |queries| are small;
-* display-field materialization (J2) broadcasts the top-k rows against
-  the docs table.
+  the shuffle for the window is coalesced; k and |queries| are small.
 """
 
 from __future__ import annotations
@@ -22,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .. import textlib
-from ..functions import hashing
 
 
 def query_term_rows(queries: list[tuple[str, str]],
@@ -38,13 +39,6 @@ def query_term_rows(queries: list[tuple[str, str]],
         for term, qtf in counts.items():
             rows.append((qid, term, qtf, textlib.ngram_query_weight(term)))
     return rows
-
-
-def query_terms_df(spark: SparkSession, queries: list[tuple[str, str]],
-                   ngram_max: int = 3) -> DataFrame:
-    return spark.createDataFrame(
-        query_term_rows(queries, ngram_max),
-        "qid string, term string, qtf long, w double")
 
 
 def score_bm25(postings: DataFrame, terms: DataFrame) -> DataFrame:
@@ -73,46 +67,94 @@ def score_tfidf(tfidf: DataFrame, term_stats: DataFrame,
 
 
 def topk(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query top-k: (score desc, doc_id asc) —
-    the canonical tie-break (SURVEY.md §4.4) replacing the reference's
-    insertion-order-stable sort (DocumentIndex.py:198-199)."""
+    """Deterministic per-query top-k of a (qid, doc_id, score) frame:
+    (score desc, doc_id asc) — the canonical tie-break (SURVEY.md §4.4)
+    replacing the reference's insertion-order-stable sort
+    (DocumentIndex.py:198-199). Returns (qid, rank, doc_id, score)
+    ordered by (qid, rank)."""
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+            .where(F.col("rank") <= k)
+            .select("qid", "rank", "doc_id", "score")
+            .orderBy("qid", "rank"))
 
 
-def attach_documents(topk_df: DataFrame, docs: DataFrame) -> DataFrame:
-    """J2: materialize display fields for the top-k rows; the k·|queries|
-    side is broadcast so the docs table is never shuffled."""
-    return docs.select("doc_id", "url", "title", "description",
-                       "icon_url").join(F.broadcast(topk_df), "doc_id")
+def terms_df(spark: SparkSession, rows: list) -> DataFrame:
+    """The broadcast side of every method: ``query_term_rows`` as a
+    (qid, term, qtf, w) frame."""
+    return spark.createDataFrame(
+        rows, "qid string, term string, qtf long, w double")
+
+
+def _layer(index: dict, name: str, what: str, flag: str) -> DataFrame:
+    """The index's optional ``name`` stage; ValueError naming the build
+    flag when the index was built without it (or the dict sets None)."""
+    df = index.get(name)
+    if df is None:
+        raise ValueError(
+            f"{what} needs an index built with {flag}=True "
+            f"(build_persistent_index(..., {flag}=True) or "
+            f"jobs/build_index.py --{flag})")
+    return df
 
 
 def run_batch(spark: SparkSession, queries: list[tuple[str, str]],
-              index: dict, k: int = 100, method: str = "bm25",
-              n_buckets: int | None = None) -> DataFrame:
-    """Full batch retrieval (§3.3): one scoring pass for all queries.
+              index: dict, k: int = 100, method: str = "wand") -> DataFrame:
+    """Batch retrieval over a loaded index (``plans.build.load_index``):
+    one scoring pass for all queries, returning (qid, rank, doc_id,
+    score) ordered by (qid, rank) for the TSV run-file sink.
 
-    ``method="bm25"`` is the naive union-sum over the flat
-    ``bm25_postings`` of ``indexing.build_index`` — the reference the
-    WAND path over a built index is tested against; ``n_buckets``
-    prunes it as in ``hashing.prune``. Returns (qid, rank, doc_id,
-    score) ordered for the TSV run-file sink.
+    * ``wand`` (alias ``bm25``): block-max WAND over the compressed
+      postings (``wand.run_wand``), bucket-pruned with the index's
+      recorded bucket count;
+    * ``tfidf``: Σ (qtf·idf)·(tf·idf) planned from ``tf`` and
+      ``term_stats`` (``score_tfidf``);
+    * ``bm25f``: body + anchor fields (``bm25f.run_bm25f_batch``; needs
+      an ``anchor=True`` index);
+    * ``phrase``: each query is one exact phrase, scored by occurrence
+      count over the positional layer (``phrase.phrase_occurrences_batch``;
+      needs a ``positional=True`` index).
+
+    Ties rank by doc_id (``topk``). ValueError for an unknown method or
+    a missing layer.
     """
-    rows = query_term_rows(queries)
-    terms = spark.createDataFrame(
-        rows, "qid string, term string, qtf long, w double")
-    if method == "bm25":
-        postings = hashing.prune(index["bm25_postings"],
-                                 [r[1] for r in rows], n_buckets)
-        scored = score_bm25(postings, terms)
-    elif method == "tfidf":
-        scored = score_tfidf(index["tfidf"], index["term_stats"], terms)
+    if method in ("wand", "bm25"):
+        from .wand import run_wand
+        return run_wand(spark, queries, index["postings_compressed"],
+                        index["doc_dim"], k=k,
+                        n_buckets=index["stats"]["n_buckets"])
+    if method == "bm25f":
+        from .bm25f import run_bm25f_batch
+        _layer(index, "anchor_field", "bm25f", "anchor")
+        return run_bm25f_batch(spark, queries, index, k=k)
+    if method == "tfidf":
+        from .indexing import build_tfidf
+        terms = terms_df(spark, query_term_rows(queries))
+        scored = score_tfidf(build_tfidf(index["tf"], index["term_stats"]),
+                             index["term_stats"], terms)
+    elif method == "phrase":
+        from .phrase import phrase_occurrences_batch
+        ptok = _layer(index, "positional_postings", "phrase search",
+                      "positional")
+        phrases = [(qid, textlib.tokenize(q, 1)) for qid, q in queries]
+        hits = phrase_occurrences_batch(
+            ptok, [(qid, toks) for qid, toks in phrases if toks],
+            n_buckets=index["stats"]["n_buckets"])
+        scored = hits.select("qid", "doc_id",
+                             F.col("ptf").cast("double").alias("score"))
     else:
         raise ValueError(f"unknown method {method!r}")
-    return (topk(scored, k)
-            .select("qid", "rank", "doc_id", "score")
-            .orderBy("qid", "rank"))
+    return topk(scored, k)
+
+
+def run_naive_bm25(spark: SparkSession, queries: list[tuple[str, str]],
+                   index: dict, k: int = 100) -> DataFrame:
+    """The naive union-sum over the flat ``bm25_postings`` of
+    ``indexing.build_index`` — the reference the WAND path over a built
+    index is tested against. Returns (qid, rank, doc_id, score) ordered
+    like ``run_batch``."""
+    return topk(score_bm25(index["bm25_postings"],
+                           terms_df(spark, query_term_rows(queries))), k)
 
 
 def write_run_file(results: DataFrame, docs: DataFrame, path: str) -> None:

@@ -321,9 +321,7 @@ def run_wand(spark: SparkSession, queries: list[tuple[str, str]],
     from . import query as qmod
 
     rows = qmod.query_term_rows(queries)
-    terms = spark.createDataFrame(
-        rows, "qid string, term string, qtf long, w double")
-    terms = terms.select(
+    terms = qmod.terms_df(spark, rows).select(
         "qid", "term",
         (F.col("qtf").cast("double") * F.col("w")).alias("mult"))
     work = hashing.prune(compressed, [r[1] for r in rows], n_buckets)

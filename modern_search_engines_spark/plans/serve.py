@@ -9,12 +9,13 @@ document-display dicts → optional MMR diversification
 one front door: it IS the hot tier (``plans.hot.HotSearchService``), so
 bm25 ranking (``HotSearcher.search``, rank- and score-identical to
 WAND), the display rows and ``summarize`` run driver-side with pyarrow
-and no Spark job. Spark serves only what the hot artifact cannot
-answer: tfidf, bm25f, phrase search, MMR diversity, the
-spell-correction vocabulary and batch summaries. Each Spark method
-collects just its ≤ top_k ranked (doc_id, score) rows and shares the
-hot tier's display path, so every method returns the reference's JSON
-shape (url, url_hash, title, description, icon_url, score [, topics]).
+and no Spark job. tfidf, bm25f and phrase search are answered by the
+batch entry point the run_queries job uses (``query.run_batch``) over a
+one-query batch; Spark also serves MMR diversity, the spell-correction
+vocabulary and batch summaries. Every method collects just its ≤ top_k
+ranked (doc_id, score) rows and shares the hot tier's display path, so
+every method returns the reference's JSON shape (url, url_hash, title,
+description, icon_url, score [, topics]).
 
 The LDA reranker is trained lazily on first diversified search (the
 reference loads its pre-trained gensim model at server start,
@@ -26,9 +27,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
-from ..operators import indexing, mlhooks, query as qmod, rerank
+from ..operators import mlhooks, query as qmod, rerank
 from .build import load_index
 from .hot import HotSearchService
 
@@ -40,7 +41,6 @@ class SearchService(HotSearchService):
         super().__init__(index_dir)
         self.spark = spark
         self.idx = load_index(spark, index_dir)
-        self._tfidf = None
         self._reranker = None
         self._vocab: dict[str, int] | None = None
 
@@ -74,62 +74,25 @@ class SearchService(HotSearchService):
 
     # -- retrieval ----------------------------------------------------------
 
-    @staticmethod
-    def _collect(ranked: DataFrame) -> list[tuple[str, float]]:
-        """A Spark top-k frame (doc_id, score, …) of ≤ top_k rows →
-        [(doc_id, score)] in the canonical (score desc, doc_id asc)
-        order, ready for the shared display path."""
-        rows = ranked.orderBy(F.desc("score"), F.asc("doc_id")).collect()
-        return [(r["doc_id"], float(r["score"])) for r in rows]
-
-    def _search_tfidf(self, q: str, top_k: int) -> list[dict]:
-        if self._tfidf is None:
-            self._tfidf = indexing.build_tfidf(
-                self.idx["tf"], self.idx["term_stats"])
-        terms = qmod.query_terms_df(self.spark, [("q", q)])
-        scored = qmod.score_tfidf(self._tfidf, self.idx["term_stats"],
-                                  terms)
-        top = qmod.topk(scored, top_k)
-        return self._results(self._collect(top))
-
-    def _search_bm25f(self, q: str, top_k: int) -> list[dict]:
-        """BM25F over the anchor field — an engine EXTENSION (the
-        reference scores body text only, BM25Ranker.py:18-61). Requires
-        an index built with ``anchor=True``; the anchor scan is
-        partition-pruned to the query terms' buckets
-        (operators/bm25f.run_bm25f_batch)."""
-        if self.idx.get("anchor_field") is None:
-            raise ValueError(
-                "bm25f needs an index built with anchor=True "
-                "(build_persistent_index(..., anchor=True) or "
-                "jobs/build_index.py --anchor)")
-        from ..operators import bm25f
-        ranked = bm25f.run_bm25f_batch(self.spark, [("q", q)], self.idx,
-                                       k=top_k)
-        return self._results(self._collect(ranked))
+    def _ranked(self, text: str, top_k: int, method: str) -> list[dict]:
+        """``text`` as a one-query ``query.run_batch`` → its ≤ top_k rows
+        in rank order → the shared display path."""
+        rows = qmod.run_batch(self.spark, [("q", text)], self.idx,
+                              k=top_k, method=method).collect()
+        return self._results([(r["doc_id"], float(r["score"]))
+                              for r in rows])
 
     def phrase_search(self, phrase: str, top_k: int = 20) -> list[dict]:
         """Exact-phrase retrieval over the positional layer — an engine
         EXTENSION (the reference's position-free index,
         DocumentIndex.py:32,131, cannot answer phrase queries). Requires
-        an index built with ``positional=True``; ranks by phrase
-        occurrence count, ties by doc_id. The scan is partition-pruned
-        to the phrase terms' buckets (operators/phrase.py)."""
-        ptok = self.idx.get("positional_postings")
-        if ptok is None:
-            raise ValueError(
-                "phrase search needs an index built with positional=True "
-                "(build_persistent_index(..., positional=True) or "
-                "jobs/build_index.py --positional)")
+        an index built with ``positional=True`` (ValueError otherwise);
+        ranks by phrase occurrence count, ties by doc_id. A phrase with
+        no tokens matches nothing."""
         from .. import textlib
-        from ..operators import phrase as phrase_ops
-        toks = textlib.tokenize(phrase, 1)
-        if not toks:
+        if not textlib.tokenize(phrase, 1):
             return []
-        ranked = phrase_ops.phrase_topk(
-            ptok, toks, k=top_k, n_buckets=self.idx["stats"]["n_buckets"])
-        return self._results(self._collect(
-            ranked.withColumnRenamed("ptf", "score")))
+        return self._ranked(phrase, top_k, "phrase")
 
     def search(self, query: str, top_k: int = 20,
                retrieval_method: str = "bm25",
@@ -148,12 +111,10 @@ class SearchService(HotSearchService):
         method = retrieval_method.lower()
         if method == "bm25":
             docs = self._results(self.searcher.search(query, top_k))
-        elif method == "tfidf":
-            docs = self._search_tfidf(query, top_k)
-        elif method == "bm25f":
-            # extension method (not in views.py's bm25|tfidf set):
-            # body + in-link anchor-text fields, anchor-built index only
-            docs = self._search_bm25f(query, top_k)
+        elif method in ("tfidf", "bm25f"):
+            # bm25f is an extension method (not in views.py's bm25|tfidf
+            # set): body + in-link anchor-text fields, anchor-built index
+            docs = self._ranked(query, top_k, method)
         else:
             raise ValueError(
                 f"Retrieval method not supported: {retrieval_method}")

@@ -10,7 +10,7 @@ corpus:
    resolve onto its first 1000 page slugs, so the in-link distribution
    is heavily skewed — the exact shape the map-side-combinable
    (dst, term) count is built for.
-2. QUERY COST — 20-query batch BM25F (run_bm25f_batch, anchor scan
+2. QUERY COST — 20-query batch BM25F (run_batch, anchor scan
    bucket-pruned) vs the same batch through the bm25 WAND path over the
    compressed postings, min-of-2 each, alternating: what the second
    field costs at query time.
@@ -51,7 +51,7 @@ def main() -> int:
     sizes = [int(s) for s in args.sizes.split(",")]
 
     from modern_search_engines_spark import corpus
-    from modern_search_engines_spark.operators import bm25f, wand
+    from modern_search_engines_spark.operators import query as qmod
     from modern_search_engines_spark.plans.build import (
         build_persistent_index,
         load_index,
@@ -101,14 +101,11 @@ def main() -> int:
             idx = load_index(spark, keep)
             ts: dict[str, list[float]] = {"bm25f": [], "bm25": []}
             for _ in range(2):
-                t0 = time.time()
-                bm25f.run_bm25f_batch(spark, QUERIES, idx, k=100).collect()
-                ts["bm25f"].append(time.time() - t0)
-                t0 = time.time()
-                wand.run_wand(spark, QUERIES, idx["postings_compressed"],
-                              idx["doc_dim"], k=100,
-                              n_buckets=idx["stats"]["n_buckets"]).collect()
-                ts["bm25"].append(time.time() - t0)
+                for tag in ("bm25f", "bm25"):
+                    t0 = time.time()
+                    qmod.run_batch(spark, QUERIES, idx, k=100,
+                                   method=tag).collect()
+                    ts[tag].append(time.time() - t0)
             for tag in ("bm25f", "bm25"):
                 out[f"batch20_{tag}_sec_{n}"] = round(min(ts[tag]), 3)
             shutil.rmtree(keep, ignore_errors=True)

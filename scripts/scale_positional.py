@@ -6,11 +6,11 @@ on the deterministic synthetic page corpus:
    positional=True (same corpus, same session, alternating order). The
    stage is opt-in because at 10^12 docs the positional table is the
    index's largest artifact; this measures what turning it on costs.
-2. QUERY PRUNING — phrase_topk latency over the committed bucketed
-   table with bucket pruning (n_buckets passed) vs a full-table scan
-   (n_buckets=None), min-of-2 each. Pruning should approach
-   (buckets touched)/(total buckets) of the scan cost as the table
-   outgrows fixed job overhead.
+2. QUERY PRUNING — ``run_batch(method="phrase")`` latency over the
+   committed bucketed table with bucket pruning (the recorded n_buckets)
+   vs a full-table scan (n_buckets=None), min-of-2 each. Pruning should
+   approach (buckets touched)/(total buckets) of the scan cost as the
+   table outgrows fixed job overhead.
 
 Prints one JSON line. Usage:
     python scripts/scale_positional.py [--sizes 8000,80000] [--cpus 16]
@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
 
-PHRASE = ["castle", "museum"]  # frequent in the synthetic page text
+PHRASE = "castle museum"  # frequent in the synthetic page text
 N_BUCKETS = 64
 
 
@@ -41,7 +41,7 @@ def main() -> int:
     sizes = [int(s) for s in args.sizes.split(",")]
 
     from modern_search_engines_spark import corpus
-    from modern_search_engines_spark.operators import phrase
+    from modern_search_engines_spark.operators import query as qmod
     from modern_search_engines_spark.plans.build import (
         build_persistent_index,
     )
@@ -93,8 +93,10 @@ def main() -> int:
             for _ in range(2):  # alternate arms so a slow phase can't
                 for tag, nb in (("pruned", N_BUCKETS), ("full", None)):
                     t0 = time.time()
-                    phrase.phrase_topk(ptok, PHRASE, k=20,
-                                       n_buckets=nb).collect()
+                    index = {"positional_postings": ptok,
+                             "stats": {"n_buckets": nb}}
+                    qmod.run_batch(spark, [("q", PHRASE)], index, k=20,
+                                   method="phrase").collect()
                     ts[tag].append(time.time() - t0)
             for tag in ("pruned", "full"):
                 out[f"phrase_{tag}_sec_{n}"] = round(min(ts[tag]), 3)

@@ -39,7 +39,8 @@ def test_extract_anchor_pairs_planted():
 
 
 def _expected_anchor_counts(rows, indexed_ids):
-    """Pure-python twin of build_anchor_field over collected pages."""
+    """Pure-python twin of build_anchor_field_from_extracted over
+    collected pages."""
     counts: dict[tuple[str, str], int] = {}
     lens: dict[str, int] = {}
     for url, html in rows:

@@ -84,12 +84,15 @@ def test_entry_smoke(spark):
     assert df.columns == ["doc_id", "score", "rank"]
 
 
-def test_bm25f_topk_leaves_no_cached_rdds(spark):
-    """The entry leaves nothing persisted in the session once its
-    result is collected."""
+@pytest.mark.parametrize("name", ["bm25_topk", "tfidf_topk",
+                                  "bm25_conj_topk", "bm25f_topk",
+                                  "phrase_match_topk"])
+def test_retrieval_entry_leaves_no_cached_rdds(spark, name):
+    """A retrieval entry leaves nothing persisted in the session once
+    its result is collected."""
     def persistent():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     before = persistent()
-    assert entrymod.queries()["bm25f_topk"](spark, SF).collect()
+    assert entrymod.queries()[name](spark, SF).collect()
     assert persistent() == before

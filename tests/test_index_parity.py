@@ -111,8 +111,7 @@ def test_bm25_partials_match(spark_index, oracle):
 
 
 def test_bm25_topk_rank_identical(spark, spark_index, oracle):
-    res = query.run_batch(spark, QUERIES, spark_index, k=10,
-                          method="bm25").collect()
+    res = query.run_naive_bm25(spark, QUERIES, spark_index, k=10).collect()
     got: dict[str, list] = {}
     for r in res:
         got.setdefault(r["qid"], []).append((r["doc_id"], r["score"]))
@@ -140,7 +139,7 @@ def test_tfidf_topk_rank_identical(spark, spark_index, oracle):
 
 def test_run_file_format(spark, spark_index, tmp_path):
     out = str(tmp_path / "run")
-    res = query.run_batch(spark, QUERIES[:2], spark_index, k=5)
+    res = query.run_naive_bm25(spark, QUERIES[:2], spark_index, k=5)
     query.write_run_file(res, spark_index["docs"], out)
     import glob
     files = glob.glob(out + "/part-*.csv")

@@ -21,10 +21,15 @@ def _ptok(spark, texts):
     return phrase.positional_postings(docs, toks)
 
 
+def _occurrences(ptok, ph):
+    """(doc_id, ptf) of one phrase through the batch counter."""
+    return phrase.phrase_occurrences_batch(ptok, [("q", ph)]).select(
+        "doc_id", "ptf")
+
+
 def _ptf_map(spark, texts, ph):
     ptok = _ptok(spark, texts)
-    return {r["doc_id"]: r["ptf"]
-            for r in phrase.phrase_occurrences(ptok, ph).collect()}
+    return {r["doc_id"]: r["ptf"] for r in _occurrences(ptok, ph).collect()}
 
 
 def test_phrase_basic_and_overlap(spark):
@@ -127,7 +132,7 @@ def test_randomized_vs_brute_force(spark):
 
     for ph in (["a", "b"], ["b", "b"], ["c", "a", "d"]):
         got = {r["doc_id"]: r["ptf"]
-               for r in phrase.phrase_occurrences(ptok, ph).collect()}
+               for r in _occurrences(ptok, ph).collect()}
         want = {i: _brute_phrase(tk, ph)
                 for i, tk in enumerate(toks) if _brute_phrase(tk, ph) > 0}
         assert got == want, ph
@@ -146,7 +151,7 @@ def test_phrase_plan_broadcasts_offsets(spark):
     the tag join) and the phrase-term filter must sit below the join."""
     texts = ["a b c d"] * 8
     ptok = _ptok(spark, texts)
-    plan = phrase.phrase_occurrences(
+    plan = _occurrences(
         ptok, ["a", "b"])._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -157,7 +162,7 @@ def test_phrase_plan_lists_terms_in_sorted_order(spark):
     one phrase plans the same in every Python process."""
     words = ["f", "e", "d", "c", "b", "a"]
     ptok = _ptok(spark, [" ".join(words)])
-    plan = phrase.phrase_occurrences(
+    plan = _occurrences(
         ptok, words)._jdf.queryExecution().optimizedPlan().toString()
     in_lists = re.findall(r"term#\d+ IN \(([^)]*)\)", plan)
     assert in_lists, plan
@@ -166,21 +171,21 @@ def test_phrase_plan_lists_terms_in_sorted_order(spark):
 
 
 def test_batch_matches_per_phrase(spark):
-    """phrase_occurrences_batch must equal per-phrase phrase_occurrences
-    for every query in one pass (different lengths, shared terms,
-    repeated terms)."""
+    """One phrase_occurrences_batch pass over many phrases (different
+    lengths, shared terms, repeated terms) must count every phrase
+    exactly as the brute force does on its own."""
     rng = random.Random(11)
     vocab = ["a", "b", "c", "d"]
     texts = [" ".join(rng.choice(vocab) for _ in range(rng.randint(0, 15)))
              for _ in range(30)]
+    toks = [t.split() for t in texts]
     ptok = _ptok(spark, texts)
     phrases = [("q1", ["a", "b"]), ("q2", ["b", "b"]),
                ("q3", ["c", "a", "d"]), ("q4", ["a"])]
     batch = {(r["qid"], r["doc_id"]): r["ptf"]
              for r in phrase.phrase_occurrences_batch(
                  ptok, phrases).collect()}
-    want = {}
-    for qid, ph in phrases:
-        for r in phrase.phrase_occurrences(ptok, ph).collect():
-            want[(qid, r["doc_id"])] = r["ptf"]
+    want = {(qid, i): _brute_phrase(tk, ph)
+            for qid, ph in phrases for i, tk in enumerate(toks)
+            if _brute_phrase(tk, ph) > 0}
     assert batch == want

@@ -70,8 +70,10 @@ def test_pruned_phrase_rank_identical(spark, built):
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n")).first())
     ph = [pair["t0"], pair["t1"]]
-    pruned = phrase.phrase_topk(ptok, ph, k=20, n_buckets=N_BUCKETS)
-    full = phrase.phrase_topk(ptok, ph, k=20, n_buckets=None)
+    pruned = phrase.phrase_occurrences_batch(ptok, [("q", ph)],
+                                             n_buckets=N_BUCKETS)
+    full = phrase.phrase_occurrences_batch(ptok, [("q", ph)],
+                                           n_buckets=None)
     assert sorted(map(tuple, pruned.collect())) \
         == sorted(map(tuple, full.collect()))
     assert pruned.count() > 0

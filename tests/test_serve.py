@@ -60,6 +60,42 @@ def test_search_bm25f_requires_anchor_index(service):
         service.search("castle museum", retrieval_method="bm25f")
 
 
+def test_phrase_search_requires_positional_index(service):
+    # the fixture index is built WITHOUT positional=True
+    with pytest.raises(ValueError, match="positional=True"):
+        service.phrase_search("castle museum")
+
+
+def test_run_queries_refuses_missing_layers(spark, service, tmp_path,
+                                            monkeypatch):
+    """The batch job exits non-zero, naming the build flag, for a method
+    whose layer the (anchor-less, position-less) index lacks."""
+    import importlib.util
+    import os
+
+    import pyspark.sql
+
+    from modern_search_engines_spark import session
+
+    # the job runs in this process on the shared session: keep its
+    # closing spark.stop() from ending the session for later tests
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(pyspark.sql.SparkSession, "stop", lambda self: None)
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "jobs", "run_queries.py")
+    spec = importlib.util.spec_from_file_location("jobs_run_queries", path)
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+    qpath = tmp_path / "queries.tsv"
+    qpath.write_text("q1\tcastle museum\n")
+    for method, flag in (("bm25f", "--anchor"), ("phrase", "--positional")):
+        with pytest.raises(SystemExit) as ei:
+            job.main(["--index", service.index_dir, "--queries", str(qpath),
+                      "--out", str(tmp_path / method), "--method", method])
+        assert ei.value.code not in (0, None), method
+        assert flag in str(ei.value.code), ei.value.code
+
+
 def test_search_with_diversity_reranks(service):
     plain = service.search("castle museum university", top_k=8)
     diverse = service.search("castle museum university", top_k=8,
