@@ -214,9 +214,9 @@ def _jaccard_pairs(spark, sf):
     connected-components entries (one derivation, two consumers; its
     SQL restatement is likewise shared by both twins)."""
     from .operators import dedup
-    # the shingle table feeds sizes + both self-join sides: cache it so
-    # the tokenize/explode lineage runs once, not three times
-    pairs = dedup.jaccard_near_dups(_shingles(spark, sf).cache(),
+    # not cached: a contract entry leaves nothing persisted in the
+    # session (the tokenize/explode lineage reruns per join side)
+    pairs = dedup.jaccard_near_dups(_shingles(spark, sf),
                                     threshold=None,
                                     max_shingle_df=MAX_SHINGLE_DF)
     return (pairs.select("doc_a", "doc_b",
@@ -288,9 +288,7 @@ def q_dedup_minhash_lsh(spark, sf):
     pairs sharing any band bucket (the scale path for near-dup —
     shuffle is by band bucket, never all-pairs)."""
     from .operators import dedup
-    # signature table feeds both self-join sides inside the operator —
-    # cache the shingles so the tokenize/explode lineage runs once
-    return dedup.minhash_lsh_pairs(_shingles(spark, sf).cache(),
+    return dedup.minhash_lsh_pairs(_shingles(spark, sf),
                                    n_hashes=N_MINHASH, n_bands=N_BANDS)
 
 
@@ -440,9 +438,7 @@ def q_simhash_pairs(spark, sf):
     sh = docs.withColumn("sh", udfs.simhash_udf("single_tokens"))
     sh = sh.select("doc_id", F.col("sh.sim_hi").alias("sim_hi"),
                    F.col("sh.sim_lo").alias("sim_lo"))
-    # both sides of the band self-join read this — cache so the simhash
-    # UDF runs once per doc, not twice
-    return dedup.simhash_near_dups(sh.cache(), max_distance=8)
+    return dedup.simhash_near_dups(sh, max_distance=8)
 
 
 def q_summarize_lead(spark, sf):
@@ -516,8 +512,8 @@ def q_dedup_minhash_estimate(spark, sf):
     calibration table a dedup pipeline uses to pick banding thresholds.
     Candidates come from the band join (never all-pairs)."""
     from .operators import dedup
-    sh = _shingles(spark, sf).cache()  # feeds sig + exact-jaccard joins
-    sig = dedup.minhash_signatures(sh, N_MINHASH).cache()  # bands + sides
+    sh = _shingles(spark, sf)
+    sig = dedup.minhash_signatures(sh, N_MINHASH)
     cand = dedup.lsh_band_pairs(sig, N_MINHASH, N_BANDS)
     sa = sig.select(F.col("doc_id").alias("doc_a"),
                     *[F.col(f"h{i}").alias(f"a{i}")
@@ -937,8 +933,7 @@ def q_dup_gram_fraction(spark, sf):
     2022-style duplicate-n-gram statistics) — flags boilerplate whose
     content is mostly shared without any single near-dup partner."""
     from .operators import dedup
-    return dedup.duplicated_gram_fraction(
-        _shingles(spark, sf).cache(), min_df=2)
+    return dedup.duplicated_gram_fraction(_shingles(spark, sf), min_df=2)
 
 
 def q_dedup_keep_best(spark, sf):

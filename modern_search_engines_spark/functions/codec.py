@@ -3,8 +3,11 @@ block-max metadata (north rule: "sorted, delta-gap + varint-compressed
 posting lists ... block-max WAND pruning").
 
 Pure numpy — vectorized encode/decode, no per-element Python in the hot
-path. Used inside Arrow-batched UDFs (``operators/postings.py``) and by
-the WAND query path (``operators/wand.py``).
+path. Used inside Arrow-batched UDFs (``operators/postings.py``), by
+the WAND query path (``operators/wand.py``) and by the hot tier
+(``plans/hot.py``), which decodes a whole bucket's lists in one
+``decompress`` call: blobs of several lists laid back to back (an Arrow
+column's values, ``arrow_blobs``) decode as one, with per-list counts.
 
 Layout per posting list (one term, doc ids ascending):
   ids_blob      varint gaps; the first element of each block stores gap 0 —
@@ -191,20 +194,45 @@ def compress_batch(lists: list[tuple[np.ndarray, np.ndarray]]
 
 
 def decompress(blobs: dict) -> tuple[np.ndarray, np.ndarray]:
-    """Full decompress → (ids int64 ascending, scores float64)."""
-    n = int(blobs["n"])
-    if n == 0:
+    """Full decompress → (ids int64, scores float64).
+
+    ``blobs["n"]`` is one list's posting count, or an int array of the
+    counts of several lists whose blobs lie back to back in
+    ``ids_blob``, ``scores_blob`` and ``block_first`` (a table column's
+    values, e.g. via ``arrow_blobs``). Each list's ids come out
+    ascending, the lists in input order; one segmented cumsum decodes
+    them all. ``block_max``/``block_off`` are not read."""
+    n = np.atleast_1d(np.asarray(blobs["n"], dtype=np.int64))
+    total = int(n.sum())
+    if total == 0:
         return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64))
-    gaps = varint_decode(blobs["ids_blob"], n).astype(np.int64)
+    gaps = varint_decode(blobs["ids_blob"], total).astype(np.int64)
     block_first = np.frombuffer(blobs["block_first"], dtype=np.int64)
-    block_starts = np.arange(0, n, BLOCK)
-    sizes = np.diff(np.append(block_starts, n))
+    # block b of list l starts at posting start(l) + BLOCK * b; a list
+    # with n = 0 has no block, so block starts strictly ascend and each
+    # block's size is the distance to the next start
+    nblocks = -(-n // BLOCK)
+    first_block = np.cumsum(nblocks) - nblocks
+    block_starts = (np.repeat(np.cumsum(n) - n, nblocks) + BLOCK * (
+        np.arange(nblocks.sum()) - np.repeat(first_block, nblocks)))
+    sizes = np.diff(np.append(block_starts, total))
     # segmented cumsum: within-block inclusive cumsum of gaps
     cs = np.cumsum(gaps)
     seg = cs - np.repeat(cs[block_starts] - gaps[block_starts], sizes)
     ids = np.repeat(block_first, sizes) + seg
     scores = np.frombuffer(blobs["scores_blob"], dtype=np.float64).copy()
     return ids, scores
+
+
+def arrow_blobs(arr) -> memoryview:
+    """The back-to-back values of an Arrow ``binary`` or ``large_binary``
+    array as one zero-copy buffer (the input ``decompress`` takes for
+    several lists)."""
+    _, offsets, data = arr.buffers()
+    wide = str(arr.type) == "large_binary"
+    offs = np.frombuffer(offsets, dtype=np.int64 if wide else np.int32)
+    lo, hi = int(offs[arr.offset]), int(offs[arr.offset + len(arr)])
+    return memoryview(data)[lo:hi] if data is not None else memoryview(b"")
 
 
 def decompress_block(blobs: dict, bi: int) -> tuple[np.ndarray, np.ndarray]:

@@ -13,12 +13,13 @@ terms to their buckets (the bucket count the index records in
 (``functions/hashing`` — canary-checked against the JVM), read ONLY the
 matching ``bucket=<b>`` parquet directories with pyarrow (dir-level
 pruning, the same pruning the Spark scan does), and score with a
-vectorized union-sum over the decompressed lists (exact OR semantics —
+vectorized union-sum over the terms' decoded lists (exact OR semantics —
 see ``search``). Hot results are rank- and score-identical to the
 distributed WAND path (tested).
 
-Memory bounds: nothing whole-index lives in RAM. Read blobs are cached
-per (bucket) on an LRU-ish dict capped by ``MAX_CACHED_BUCKETS``. One
+Memory bounds: nothing whole-index lives in RAM. A bucket is decoded
+once when read (one ``codec.decompress``) and cached as term → (ids,
+scores) in an LRU dict capped by ``MAX_CACHED_BUCKETS``. One
 lookup, ``_doc_rows``, resolves each query's ≤ k result ids to their
 doc_id AND display fields with a row-group-pruned read of the docs
 parquet: the build sorts the docs stage by doc_id, so parquet column
@@ -43,9 +44,8 @@ from ..functions import codec, hashing
 from ..operators import query as qmod
 from .build import read_stats
 
-_BLOB_COLS = ["term", "shard", "n", "ids_blob", "scores_blob",
-              "block_first", "block_max", "block_off"]
-MAX_CACHED_BUCKETS = 64  # one bucket's decoded rows per entry
+_COLS = ["term", "n", "ids_blob", "scores_blob", "block_first"]
+MAX_CACHED_BUCKETS = 64  # decoded buckets kept, least recently used out
 MAX_CACHED_DOC_IDS = 65536  # resolved doc_idx -> display rows
 
 
@@ -55,7 +55,7 @@ class HotSearcher:
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
         self.n_buckets = read_stats(index_dir)["n_buckets"]
-        self._buckets: dict[int, dict[str, list[dict]]] = {}
+        self._buckets: dict[int, dict[str, list[tuple]]] = {}
         self._doc_cache: dict[int, dict] = {}
         self._docs_files: list[pq.ParquetFile] | None = None
         # row-group pruning observability (asserted by tests): the docs
@@ -68,22 +68,26 @@ class HotSearcher:
 
     # -- bucket-pruned posting access ---------------------------------------
 
-    def _bucket_rows(self, bucket: int) -> dict[str, list[dict]]:
-        """term → compressed posting rows of one bucket directory."""
-        cached = self._buckets.get(bucket)
-        if cached is not None:
-            return cached
-        path = os.path.join(self.index_dir, "postings_compressed",
-                            f"bucket={bucket}")
-        out: dict[str, list[dict]] = {}
-        if os.path.isdir(path):
-            table = pq.read_table(path, columns=_BLOB_COLS)
-            cols = {c: table.column(c).to_pylist() for c in _BLOB_COLS}
-            for i in range(table.num_rows):
-                row = {c: cols[c][i] for c in _BLOB_COLS}
-                out.setdefault(row["term"], []).append(row)
-        if len(self._buckets) >= MAX_CACHED_BUCKETS:
-            self._buckets.pop(next(iter(self._buckets)))
+    def _bucket_rows(self, bucket: int) -> dict[str, list[tuple]]:
+        """term → decoded (ids, scores) per posting row of one bucket, in
+        table row order; a hit moves the bucket to the LRU cache's back."""
+        out = self._buckets.pop(bucket, None)
+        if out is None:
+            out = {}
+            path = os.path.join(self.index_dir, "postings_compressed",
+                                f"bucket={bucket}")
+            if os.path.isdir(path):
+                table = pq.read_table(path, columns=_COLS)
+                n = table.column("n").to_numpy()
+                ids, scores = codec.decompress({"n": n, **{
+                    c: codec.arrow_blobs(table.column(c).combine_chunks())
+                    for c in _COLS[2:]}})
+                ends = np.cumsum(n)
+                for term, s, e in zip(table.column("term").to_pylist(),
+                                      (ends - n).tolist(), ends.tolist()):
+                    out.setdefault(term, []).append((ids[s:e], scores[s:e]))
+            if len(self._buckets) >= MAX_CACHED_BUCKETS:
+                self._buckets.pop(next(iter(self._buckets)))
         self._buckets[bucket] = out
         return out
 
@@ -150,9 +154,9 @@ class HotSearcher:
         therefore to the single-node oracle's retrieve).
 
         The hot tier scores with a fully-vectorized union-sum: every
-        matching posting list is decompressed (vectorized codec), scores
-        are scaled by the query-side multiplier, and per-doc sums +
-        top-k come from one ``np.unique``/``bincount``/``argpartition``
+        matching posting list (decoded once, when its bucket was read)
+        has its scores scaled by the query-side multiplier, and per-doc
+        sums + top-k come from one ``np.unique``/``bincount``/``lexsort``
         pass. For interactive single queries this beats the pythonic
         document-at-a-time WAND loop by ~30× (the per-posting Python
         step dominates below ~10^6 postings); the WAND path remains the
@@ -167,11 +171,7 @@ class HotSearcher:
         for _, term, qtf, w in rows:
             bucket = hashing.bucket_of(term, self.n_buckets)
             mult = float(qtf) * w
-            for blob in self._bucket_rows(bucket).get(term, ()):
-                ids, scores = codec.decompress(
-                    {k: blob[k] for k in ("n", "ids_blob", "scores_blob",
-                                          "block_first", "block_max",
-                                          "block_off")})
+            for ids, scores in self._bucket_rows(bucket).get(term, ()):
                 id_parts.append(ids)
                 score_parts.append(scores * mult)
         if not id_parts:

@@ -133,3 +133,40 @@ def test_compress_batch_rejects_unsorted():
     bad = (np.array([4, 2], dtype=np.int64), np.ones(2))
     with pytest.raises(ValueError):
         codec.compress_batch([good, bad])
+
+
+@pytest.mark.parametrize("arrow_type", ["binary", "large_binary"])
+def test_decompress_back_to_back_lists(arrow_type):
+    """One ``decompress`` over an Arrow column's back-to-back blobs
+    equals per-list ``decompress`` concatenated, for 60-bit ids (the
+    hashed doc_idx range) and every block shape. An n = 0 list right
+    after a multi-block one must not change that list's last block."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(7)
+    sizes = [129, 0, 257, 0, 1, 128, 127, 0, 0, 257]
+    blobs = []
+    for n in sizes:
+        ids = np.sort(rng.choice(2**60, size=n, replace=False))
+        blobs.append(codec.compress(ids.astype(np.int64), rng.random(n)))
+    cols = ["ids_blob", "scores_blob", "block_first"]
+    table = pa.table({c: pa.array([b[c] for b in blobs],
+                                  type=getattr(pa, arrow_type)())
+                      for c in cols})
+    for skip in (0, 1):  # a sliced column starts past its buffer's head
+        want = [codec.decompress(b) for b in blobs[skip:]]
+        got_ids, got_scores = codec.decompress({
+            "n": np.array(sizes[skip:]),
+            **{c: codec.arrow_blobs(table.column(c).chunk(0)[skip:])
+               for c in cols}})
+        np.testing.assert_array_equal(
+            got_ids, np.concatenate([w[0] for w in want]))
+        np.testing.assert_array_equal(
+            got_scores, np.concatenate([w[1] for w in want]))
+        assert got_ids.max() >= 2**59
+
+
+def test_decompress_all_empty_lists():
+    ids, scores = codec.decompress({"n": np.array([0, 0]), "ids_blob": b"",
+                                    "scores_blob": b"", "block_first": b""})
+    assert ids.size == 0 and scores.size == 0

@@ -86,10 +86,13 @@ def test_entry_smoke(spark):
 
 @pytest.mark.parametrize("name", ["bm25_topk", "tfidf_topk",
                                   "bm25_conj_topk", "bm25f_topk",
-                                  "phrase_match_topk"])
+                                  "phrase_match_topk", "dedup_ngram_jaccard",
+                                  "dedup_minhash_lsh", "simhash_pairs",
+                                  "dedup_minhash_estimate",
+                                  "dup_gram_fraction"])
 def test_retrieval_entry_leaves_no_cached_rdds(spark, name):
-    """A retrieval entry leaves nothing persisted in the session once
-    its result is collected."""
+    """A retrieval or dedup entry leaves nothing persisted in the
+    session once its result is collected."""
     def persistent():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 

@@ -6,11 +6,14 @@ import time
 
 import pytest
 
-from modern_search_engines_spark import corpus
+from modern_search_engines_spark import corpus, textlib
+from modern_search_engines_spark.functions import codec, hashing
 from modern_search_engines_spark.operators import wand
 from modern_search_engines_spark.oracle import OracleEngine
 from modern_search_engines_spark.oracle.engine import doc_from_page
-from modern_search_engines_spark.plans.build import build_persistent_index
+from modern_search_engines_spark.plans import hot as hotmod
+from modern_search_engines_spark.plans.build import (build_persistent_index,
+                                                     load_index)
 from modern_search_engines_spark.plans.hot import (HotSearcher,
                                                    HotSearchService)
 
@@ -39,7 +42,6 @@ def oracle():
 
 def test_hot_matches_oracle_and_spark(spark, index_dir, oracle):
     hot = HotSearcher(index_dir)
-    from modern_search_engines_spark.plans.build import load_index
     idx = load_index(spark, index_dir)
     for q in QUERIES:
         got = hot.search(q, top_k=10)
@@ -128,3 +130,59 @@ def test_hot_doc_id_lookup_is_rowgroup_pruned(index_dir, tmp_path,
     before = service.searcher.docs_rowgroups_read
     assert service.search(QUERIES[0], top_k=5) == want
     assert service.searcher.docs_rowgroups_read == before
+
+
+def _posting_rows(index_dir):
+    import pyarrow.parquet as pq
+    return pq.read_table(f"{index_dir}/postings_compressed",
+                         columns=["term", "n"]).to_pylist()
+
+
+@pytest.fixture(scope="module")
+def multiblock_index_dir(spark, tmp_path_factory):
+    """An index whose head terms' posting rows span several codec
+    blocks: 300 indexable pages in two shards."""
+    pages = []
+    for p in corpus.generate_pages(1200, seed=SEED):
+        d = doc_from_page(p["url"], p["html"].decode())
+        if textlib.index_filter(d.url, textlib.is_relevant(
+                d.url, d.language, d.single_tokens), d.single_tokens):
+            pages.append(p)
+    out = str(tmp_path_factory.mktemp("hot_multiblock") / "idx")
+    df = spark.createDataFrame(pages[:300], corpus.PAGES_SCHEMA)
+    build_persistent_index(spark, df.repartition(2).drop("text", "lang"),
+                           out, n_shards=2, verbose=False)
+    return out
+
+
+def test_hot_matches_wand_on_multiblock_lists(spark, multiblock_index_dir):
+    """Hot answers equal ``run_wand``'s, rank for rank, when query terms'
+    posting rows hold more than one codec block."""
+    rows = _posting_rows(multiblock_index_dir)
+    big = sorted({r["term"] for r in rows if r["n"] > codec.BLOCK
+                  and " " not in r["term"]})
+    assert len(big) >= 2, "fixture has no multi-block posting row"
+    queries = [big[0], f"{big[0]} {big[1]}", f"{big[-1]} castle museum"]
+    hot = HotSearcher(multiblock_index_dir)
+    idx = load_index(spark, multiblock_index_dir)
+    for q in queries:
+        got = hot.search(q, top_k=10)
+        want = wand.run_wand(spark, [("q", q)], idx["postings_compressed"],
+                             idx["doc_dim"], k=10).collect()
+        assert [d for d, _ in got] == [r["doc_id"] for r in want], q
+        for (_, gs), r in zip(got, want):
+            assert gs == pytest.approx(r["score"], rel=1e-9, abs=1e-12), q
+
+
+def test_bucket_cache_evicts_least_recently_used(index_dir, monkeypatch):
+    monkeypatch.setattr(hotmod, "MAX_CACHED_BUCKETS", 2)
+    hot = HotSearcher(index_dir)
+    by_bucket = {}
+    for r in _posting_rows(index_dir):
+        if " " not in r["term"]:
+            by_bucket.setdefault(
+                hashing.bucket_of(r["term"], hot.n_buckets), r["term"])
+    (ba, a), (bb, b), (bc, c) = sorted(by_bucket.items())[:3]
+    for term in (a, b, a, c):  # the repeat of a makes b the oldest
+        assert hot.search(term, top_k=3)
+    assert list(hot._buckets) == [ba, bc]
